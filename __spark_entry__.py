@@ -91,24 +91,6 @@ def _verification_state() -> tuple[set[str], set[str], dict[str, int]]:
     return verified, set(green) - verified, green
 
 
-# Round-11 steering: the r11 opening batch re-stales the whole
-# fixture_cache import closure (71 oracle-bearing claimants vs the ~50-slot
-# window), but only a handful of those stales are SEMANTIC — their own plan
-# code or oracle changed, not merely a transitively-imported caching module
-# (lock + eviction-TTL internals that do not alter any query's result).
-# Those few carry the real regression risk, so they outrank the LRU order
-# for the bounded window; the ~21 closure-only restales that spill are
-# r12 claimants (PLANS.md round-11 ledger records the arithmetic).
-_SEMANTIC_PRIORITY = [
-    "dedup_simhash",  # 120-bit fingerprint rewiring (r11 opening batch)
-    "embed_recall_blocked",  # empty-GT oracle cardinality fix (ADVICE r10)
-    "knn_fully_trained_ivfpq",  # corpus-scaled nprobe upgrade
-    "knn_recall_fully_trained",
-    "knn_residual_ivfpq",
-    "knn_recall_residual",
-]
-
-
 def _rotated_names() -> list[str]:
     """Never-driver-checked first, then stale, then verified.
 
@@ -127,17 +109,12 @@ def _rotated_names() -> list[str]:
     order = list(QUERIES)
     # stale queries go least-recently-verified FIRST: a query green last in
     # round k has waited longer (and drifted further) than one green in
-    # round k+1, so it gets the scarcer slot (LRU over driver evidence) —
-    # except the semantically-changed pins, which outrank everything stale
+    # round k+1, so it gets the scarcer slot (LRU over driver evidence)
     names = (
         [n for n in order if n not in stale and n not in verified]
         + sorted(
             (n for n in order if n in stale),
-            key=lambda n: (
-                n not in _SEMANTIC_PRIORITY,
-                last_green.get(n, 0),
-                order.index(n),
-            ),
+            key=lambda n: (last_green.get(n, 0), order.index(n)),
         )
         + [n for n in order if n in verified]
     )

@@ -118,7 +118,6 @@ def main() -> None:
                 # The annotation lives here only — the driver-parsed
                 # stdout line below is unchanged.
                 "host": {
-                    "node": platform.node(),
                     "machine": platform.machine(),
                     "os_cpus": os.cpu_count(),
                     "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),

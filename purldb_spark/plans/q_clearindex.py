@@ -1,8 +1,8 @@
 """ClearlyDefined harvest-mapping queries (sources/clearindex.py vs the
 reference's clearindex/harvest.py map_scancode_harvest).
 
-Fixture strategy as in q_miners/q_version_apis: real harvest-shaped JSON
-documents are built with column concat from the part table, the Spark side
+Fixtures: harvest-shaped JSON documents are built with column concat from
+the `part_packages` name, the Spark side
 runs the actual from_json mapper, and the oracle SQL emits the expected
 package / resource rows directly — covering the download_url dead-letter
 rule, the file/directory flag, duplicate-path first-wins, and the sorted
@@ -15,21 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import NAME, PART_PACKAGES_SQL
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.clearindex import harvest_packages, harvest_resources
 
-_BASE_SQL = """
-  SELECT 'harvest/' || lower(replace(p_brand, '#', '-'))
-           || '-' || CAST(p_partkey AS VARCHAR) || '.json' AS cditem_path,
-         lower(replace(p_brand, '#', '-')) || '-'
-           || CAST(p_partkey AS VARCHAR) AS name,
-         CAST(p_partkey % 7 AS VARCHAR) || '.'
-           || CAST(p_partkey % 4 AS VARCHAR) AS version,
-         p_partkey % 5 = 0 AS no_url,
-         CAST(p_size AS BIGINT) AS size,
-         md5(p_name) AS sha1,
-         p_partkey AS k
-  FROM part
+_BASE_SQL = f"""
+  SELECT 'harvest/' || name || '.json' AS cditem_path, name,
+         CAST(k % 7 AS VARCHAR) || '.' || CAST(k % 4 AS VARCHAR) AS version,
+         k % 5 = 0 AS no_url, size, cs AS sha1, k
+  FROM ({PART_PACKAGES_SQL})
 """
 
 
@@ -40,19 +34,14 @@ def _cditems(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first path that must lose first-wins."""
     p = load(spark, sf_dir, "part")
     k = S.col("p_partkey")
-    name = S.concat(
-        S.lower(S.replace(S.col("p_brand"), "#", "-")),
-        "-",
-        k.cast("string"),
-    )
     version = S.concat((k % 7).cast("string"), ".", (k % 4).cast("string"))
-    purl = S.concat("pkg:generic/", name, "@", version)
-    url = S.concat("https://dl.example/", name, "-", version, ".tar.gz")
+    purl = S.concat("pkg:generic/", NAME, "@", version)
+    url = S.concat("https://dl.example/", NAME, "-", version, ".tar.gz")
     sz = S.col("p_size").cast("long").cast("string")
     sha1 = S.md5(S.col("p_name"))
     pkg_json = S.concat(
         '{"purl":"', purl,
-        '","type":"generic","name":"', name,
+        '","type":"generic","name":"', NAME,
         '","version":"', version, '"',
         S.when(k % 5 == 0, "").otherwise(
             S.concat(',"download_url":"', url, '"')
@@ -61,14 +50,14 @@ def _cditems(spark: SparkSession, sf_dir: str) -> DataFrame:
         ',"sha1":"', sha1, '"}',
     )
     f1 = S.concat(
-        '{"path":"src/', name, '/main.c","type":"file","size":', sz,
+        '{"path":"src/', NAME, '/main.c","type":"file","size":', sz,
         ',"sha1":"', sha1, '",',
         '"copyrights":[{"value":"(c) B"},{"value":"(c) A"},{"value":"(c) A"}],',
         '"license_expressions":["mit","apache-2.0","mit"]}',
     )
-    f2 = S.concat('{"path":"src/', name, '","type":"directory"}')
+    f2 = S.concat('{"path":"src/', NAME, '","type":"directory"}')
     f3 = S.concat(
-        '{"path":"src/', name, '/main.c","type":"file","size":',
+        '{"path":"src/', NAME, '/main.c","type":"file","size":',
         (S.col("p_size").cast("long") + 1).cast("string"), "}",
     )
     doc = S.concat(
@@ -77,7 +66,7 @@ def _cditems(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return S.sel(
         p,
-        S.concat("harvest/", name, ".json").alias("path"),
+        S.concat("harvest/", NAME, ".json").alias("path"),
         doc.alias("data"),
     )
 

@@ -1,9 +1,9 @@
 """The collect-on-miss flow fixture query (operators/collect.py — the
 `/api/collect` equivalent, packagedb/api.py:807-855).
 
-Fixture: purl requests derive from `part` across four ecosystems
-(npm/pypi/maven plus an unroutable `weird` type); the catalog pre-contains
-every third package; registry "responses" for the misses are synthesized
+Fixture: purl requests derive from the `part_packages` rows across four
+ecosystems (npm/pypi/maven plus an unroutable `weird` type); the catalog
+pre-contains every third package; registry "responses" for the misses are synthesized
 deterministically from the purl itself, so the DuckDB oracle can replay
 the whole flow — hit/miss split, route dispatch, ingest-merge, re-lookup,
 and the maven -> github source PackageSet pairing — from first principles.
@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.operators.collect import (
     add_source_package_set,
     collect_on_miss,
@@ -22,19 +21,8 @@ from purldb_spark.operators.collect import (
 from purldb_spark.operators.merge import MergeSpec, Policy
 from purldb_spark.operators.router import Router
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
-
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CASE p_partkey % 5 WHEN 1 THEN 'pypi' WHEN 2 THEN 'maven'
-              WHEN 4 THEN 'weird' ELSE 'npm' END AS eco
-  FROM part
-"""
 
 _TYPED_SQL = f"""
   SELECT k, name, ver, eco,
@@ -42,7 +30,11 @@ _TYPED_SQL = f"""
          'pkg:' || eco ||
            (CASE WHEN eco = 'maven' THEN '/org.ex' ELSE '' END) ||
            '/' || name || '@' || ver AS purl
-  FROM ({_BASE_SQL})
+  FROM (
+    SELECT *, CASE k % 5 WHEN 1 THEN 'pypi' WHEN 2 THEN 'maven'
+                   WHEN 4 THEN 'weird' ELSE 'npm' END AS eco
+    FROM ({PART_PACKAGES_SQL})
+  )
 """
 
 _FETCHED_URL_SQL = """
@@ -60,47 +52,6 @@ _FETCHED_LIC_SQL = """
   CASE eco WHEN 'npm' THEN 'ISC' WHEN 'pypi' THEN 'Apache-2.0'
        WHEN 'maven' THEN 'EPL-1.0' END
 """
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    eco = (
-        S.when(k % 5 == 1, "pypi")
-        .when(k % 5 == 2, "maven")
-        .when(k % 5 == 4, "weird")
-        .otherwise("npm")
-    )
-    b = S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        eco.alias("eco"),
-    )
-    return S.sel(
-        b,
-        "k",
-        "name",
-        "ver",
-        "eco",
-        S.when(S.col("eco") == "maven", "org.ex").alias("namespace"),
-        S.concat(
-            "pkg:",
-            S.col("eco"),
-            S.when(S.col("eco") == "maven", "/org.ex").otherwise(""),
-            "/",
-            S.col("name"),
-            "@",
-            S.col("ver"),
-        ).alias("purl"),
-    )
 
 
 def _fetched_url(eco: Column, name: Column, ver: Column) -> Column:
@@ -180,7 +131,28 @@ def x_collect_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     with their github source repo in a PackageSet
     (find_source_repo.py:137-188): md5(source purl) set id on both the
     binary and the created source_repo row."""
-    b = _base(spark, sf_dir)
+    k = S.col("k")
+    eco = (
+        S.when(k % 5 == 1, "pypi")
+        .when(k % 5 == 2, "maven")
+        .when(k % 5 == 4, "weird")
+        .otherwise("npm")
+    )
+    b = S.sel(part_packages(spark, sf_dir), "*", eco.alias("eco"))
+    b = S.sel(
+        b,
+        "*",
+        S.when(S.col("eco") == "maven", "org.ex").alias("namespace"),
+        S.concat(
+            "pkg:",
+            S.col("eco"),
+            S.when(S.col("eco") == "maven", "/org.ex").otherwise(""),
+            "/",
+            S.col("name"),
+            "@",
+            S.col("ver"),
+        ).alias("purl"),
+    )
     catalog = S.sel(
         b.filter("k % 3 = 0 AND eco != 'weird'"),
         S.col("eco").alias("type"),

@@ -1,7 +1,8 @@
 """Collector-enrichment queries: maven POM ancestry merge and debian
 dsc/copyright enrichment (sources/collectors.py — reference
-minecode/collectors/maven.py + debian.py). Fixture strategy as q_miners*:
-ecosystem-shaped documents built with column concat, enriched by the real
+minecode/collectors/maven.py + debian.py). Fixtures: ecosystem-shaped
+documents built with column concat from the `part_packages` rows,
+enriched by the real
 operators, expected rows recomputed by the oracle from the generating
 index.
 
@@ -24,42 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.collectors import (
     enrich_debian_packages,
     merge_pom_ancestors,
     parse_pom_cols,
 )
-
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-    )
-
 
 def _pom(g, a, v, license_=None, url=None, dev=None, parent=None):
     """Small expression-text POM builder for the fixture."""
@@ -99,7 +72,7 @@ def _pom(g, a, v, license_=None, url=None, dev=None, parent=None):
 @query(
     "x_maven_pom_enrich",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'pkg:maven/org.ex/' || name || '@' || ver AS purl,
            'org.ex' AS namespace, name, ver AS version,
            CASE WHEN k % 3 = 0 THEN 'CHILD-LIC'
@@ -118,7 +91,7 @@ def x_maven_pom_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     fill empty declared_license_expression / homepage_url / parties from
     the deepest ancestor holding a value (the reference's oldest-first
     merge), child values never overwritten."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
     packages = S.sel(
         b,
@@ -179,7 +152,7 @@ def x_maven_pom_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_debian_collect_enrich",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({PART_PACKAGES_SQL}),
     d AS (
       SELECT k, name, ver,
              CASE WHEN k % 2 = 0 THEN 'lib' || name ELSE name END AS dname,
@@ -243,7 +216,7 @@ def x_debian_collect_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     file), dependency purls, Vcs field (Browser excluded), and the four
     pool archive URLs across the epoch / revision-0 / '+build' / lib-name
     / source-purl branches."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
     dname = S.when(k % 2 == 0, S.concat("lib", name)).otherwise(name)
     dver = (
@@ -305,8 +278,8 @@ def x_debian_collect_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_hf_generic_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
-    b2 AS (SELECT *, md5(CAST(k AS VARCHAR) || name) AS cs FROM base),
+    WITH base AS ({PART_PACKAGES_SQL}),
+    b2 AS (SELECT k, name, ver, md5(CAST(k AS VARCHAR) || name) AS cs FROM base),
     hf_ok AS (
       SELECT k, name, cs, 'org-' || name AS ns,
              'pkg:huggingface/org-' || name || '/' || name || '@' || cs AS purl
@@ -385,8 +358,8 @@ def x_hf_generic_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
         map_huggingface_requests,
     )
 
-    b = _base(spark, sf_dir).selectExpr(
-        "*", "md5(concat(CAST(k AS string), name)) AS cs"
+    b = part_packages(spark, sf_dir).selectExpr(
+        "k", "name", "ver", "md5(concat(CAST(k AS string), name)) AS cs"
     )
     k, name, cs = S.col("k"), S.col("name"), S.col("cs")
     ns = S.concat("org-", name)
@@ -489,8 +462,8 @@ def x_hf_generic_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_conan_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
-    b2 AS (SELECT *, md5(name || CAST(k AS VARCHAR)) AS cs FROM base)
+    WITH base AS ({PART_PACKAGES_SQL}),
+    b2 AS (SELECT k, name, ver, md5(name || CAST(k AS VARCHAR)) AS cs FROM base)
     SELECT 'pkg:conan/' || name || '@' || ver AS purl,
            CASE WHEN k % 5 IN (0, 1) THEN 'collected'
                 WHEN k % 5 IN (2, 3) THEN 'no_recipe'
@@ -526,8 +499,8 @@ def x_conan_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe / download url)."""
     from purldb_spark.sources.collectors3 import map_conan_requests
 
-    b = _base(spark, sf_dir).selectExpr(
-        "*", "md5(concat(name, CAST(k AS string))) AS cs"
+    b = part_packages(spark, sf_dir).selectExpr(
+        "k", "name", "ver", "md5(concat(name, CAST(k AS string))) AS cs"
     )
     k, name, ver, cs = S.col("k"), S.col("name"), S.col("ver"), S.col("cs")
     requests = S.sel(
@@ -599,7 +572,7 @@ def x_conan_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_golang_route",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'pkg:golang/github.com/org-' || name || '/' || name || '/v2@2.1.'
              || CAST(k AS VARCHAR) AS purl,
            'github' AS route,
@@ -644,7 +617,7 @@ def x_golang_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     API path, deps.dev fallback with the v-prefix rule."""
     from purldb_spark.sources.collectors3 import golang_route_cols
 
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name = S.col("k"), S.col("name")
     purl = (
         S.when(

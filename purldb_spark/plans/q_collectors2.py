@@ -1,7 +1,7 @@
 """Registry-API collect-family queries (sources/collectors4.py —
 reference minecode/collectors/{pypi,cargo,rubygems,nuget,npm}.py).
-Fixture strategy as q_collectors: ecosystem-shaped registry documents
-built with column concat from the part table, run through the real
+Fixtures: ecosystem-shaped registry documents built with column concat
+from the `part_packages` rows, run through the real
 collect operators, expected rows recomputed by the oracle from the
 generating index.
 
@@ -22,8 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.functions.sqlexpr import sql_concat
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.collectors4 import (
     map_cargo_collect,
@@ -33,37 +33,10 @@ from purldb_spark.sources.collectors4 import (
     map_pypi_collect,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         {_VER_SQL} || '.9' AS ver2
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    ver = (
-        "concat(CAST(p_partkey % 9 AS STRING), '.',"
-        " CAST(p_partkey % 5 AS STRING), '.0')"
-    )
-    return p.selectExpr(
-        "p_partkey AS k",
-        "concat(lower(replace(p_brand, '#', '-')), '-',"
-        " CAST(p_partkey AS STRING)) AS name",
-        f"{ver} AS ver",
-        f"concat({ver}, '.9') AS ver2",
-    )
-
-
 @query(
     "x_pypi_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({PART_PACKAGES_SQL}),
     rel AS (  -- one row per (request-kind, resolved version) with a doc
       SELECT k, name, ver AS v FROM base WHERE k % 4 = 0
       UNION ALL SELECT k, name, ver2 FROM base WHERE k % 4 = 0
@@ -108,7 +81,7 @@ def x_pypi_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per download, downloads classify source_archive/binary by
     extension; missing docs and empty version lists surface as status
     rows."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     requests = (
         b.filter("k % 4 = 0 OR k % 4 = 3").selectExpr(
             "concat('pkg:pypi/', name) AS purl",
@@ -165,7 +138,7 @@ def x_pypi_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_cargo_gem_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({PART_PACKAGES_SQL}),
     cargo_rel AS (
       SELECT k, name, ver AS v FROM base WHERE k % 3 = 0
       UNION ALL SELECT k, name, ver2 FROM base WHERE k % 3 = 0
@@ -203,7 +176,7 @@ def x_cargo_gem_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     collectors/rubygems.py:24-88): the crate doc maps every version
     unless the purl pins one; gem purls fan out over the v1 version
     list then join the v2 document; misses surface as status rows."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
 
     cargo_requests = (
         b.filter("k % 3 = 0").selectExpr(
@@ -270,7 +243,7 @@ def x_cargo_gem_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_nuget_npm_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({PART_PACKAGES_SQL}),
     nuget_rel AS (
       SELECT k, name, ver AS v FROM base WHERE k % 3 = 0
       UNION ALL SELECT k, name, ver2 FROM base WHERE k % 3 = 0
@@ -321,7 +294,7 @@ def x_nuget_npm_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     by lowercased name and every catalogEntry maps unless the purl pins
     a version; npm builds the scoped/unscoped API URL and silently
     skips versionless purls (surfaced as missing_version)."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
 
     nuget_requests = (
         b.filter("k % 3 = 0").selectExpr(

@@ -1,8 +1,8 @@
 """VCS-tag / URL-builder collect-family queries (sources/collectors5.py
 — reference minecode/collectors/{github,gitlab,bitbucket,swift,generic,
 openssl,gnu,hackage,luarocks,conda,alpine,alpm,nix,dockerhub}.py).
-Fixtures from the part table as q_collectors/q_collectors2; expected
-rows recomputed by the oracle from the generating index.
+Fixtures built from the `part_packages` rows; expected rows recomputed
+by the oracle from the generating index.
 """
 
 from __future__ import annotations
@@ -10,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.collectors5 import (
     alpine_archive_urls,
@@ -29,37 +29,10 @@ from purldb_spark.sources.collectors5 import (
     parse_gitlab_tags,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         {_VER_SQL} || '.9' AS ver2
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    ver = (
-        "concat(CAST(p_partkey % 9 AS STRING), '.',"
-        " CAST(p_partkey % 5 AS STRING), '.0')"
-    )
-    return p.selectExpr(
-        "p_partkey AS k",
-        "concat(lower(replace(p_brand, '#', '-')), '-',"
-        " CAST(p_partkey AS STRING)) AS name",
-        f"{ver} AS ver",
-        f"concat({ver}, '.9') AS ver2",
-    )
-
-
 @query(
     "x_vcs_tags_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'gitlab' AS source, 'grp-' || name AS key, 'v' || ver AS version,
            'Ann ' || name AS author, name || '@ex.com' AS author_email,
            NULL AS download_url
@@ -97,7 +70,7 @@ def x_vcs_tags_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     author-typed entries, swift owner extraction + tag pin with no_tag
     misses (status column folded into version/null shape here: a swift
     miss keeps NULL version)."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
 
     gitlab = parse_gitlab_tags(
         b.selectExpr(
@@ -190,7 +163,7 @@ def x_vcs_tags_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_fetchcode_distro_route",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'pkg:openssl/openssl@' || ver AS purl, 'fetchcode' AS route,
            NULL AS download_url, NULL AS index_url
     FROM base WHERE k % 8 = 0
@@ -242,7 +215,7 @@ def x_fetchcode_distro_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     package itself, gnu skips versionless purls, generic routes the
     supported-name list, conda/alpine URLs are NULL when qualifiers are
     missing, alpm defaults arch to "any"."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     sk, sname, sver = S.col("k"), S.col("name"), S.col("ver")
     k, name, ver = F.col("k"), F.col("name"), F.col("ver")
 
@@ -304,7 +277,7 @@ def x_fetchcode_distro_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_hackage_luarocks_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'pkg:hackage/' || name || '@' || ver AS purl,
            CASE WHEN k % 3 < 2 THEN 'collected'
                 ELSE 'version_not_found' END AS status,
@@ -343,7 +316,7 @@ def x_hackage_luarocks_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     URL templates after the version list admits the purl; luarocks
     requires a namespace to build its manifests URL and a HEAD-200
     existence hit to collect."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver, ver2 = S.col("k"), S.col("name"), S.col("ver"), S.col("ver2")
 
     hk_requests = S.sel(
@@ -392,7 +365,7 @@ def x_hackage_luarocks_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_nix_dockerhub_collect",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'pkg:nix/nixpkgs/' || name || '@' || ver AS purl,
            CASE WHEN k % 3 = 0 THEN 'devbox' ELSE 'skipped_namespace' END
              AS status,
@@ -429,7 +402,7 @@ def x_nix_dockerhub_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortName; docker purls default to the library namespace, match
     digests for sha256 versions, names otherwise, and fan out over all
     tags when versionless."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver, ver2 = S.col("k"), S.col("name"), S.col("ver"), S.col("ver2")
 
     nix_ns = S.when(k % 3 == 0, "Nixpkgs").otherwise(

@@ -2,7 +2,8 @@
 matchcode/api.py:454-566 D2DViewSet/D2DSerializer, purldb/urls.py:58).
 Fixture covers the endpoint's response matrix: clean from/to url pair,
 textarea submission with embedded newlines + blank lines, unreachable-url
-rejection with the literal error message, and blank-element dropping."""
+rejection with the literal error message, and blank-element dropping.
+The urls carry the `part_packages` name."""
 
 from __future__ import annotations
 
@@ -16,9 +17,9 @@ from purldb_spark.operators.d2d import (
     d2d_create,
 )
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import NAME, PART_PACKAGES_SQL
 from purldb_spark.plans.registry import query
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
 _FROM_SQL = "'https://repo.example.org/' || name || '-from.zip#from'"
 _TO_SQL = "'https://repo.example.org/' || name || '-to.zip#to'"
 
@@ -26,9 +27,7 @@ _TO_SQL = "'https://repo.example.org/' || name || '-to.zip#to'"
 @query(
     "x_d2d_request",
     oracle=f"""
-    WITH base AS (
-      SELECT p_partkey AS k, {_NAME_SQL} AS name FROM part
-    ),
+    WITH base AS ({PART_PACKAGES_SQL}),
     u AS (
       SELECT k, {_FROM_SQL} AS u_from, {_TO_SQL} AS u_to FROM base
     )
@@ -77,13 +76,8 @@ def x_d2d_request(spark: SparkSession, sf_dir: str) -> DataFrame:
     api.py:553-556)."""
     p = load(spark, sf_dir, "part")
     k = S.col("p_partkey")
-    name = S.concat(
-        S.lower(S.replace(S.col("p_brand"), "#", "-")),
-        "-",
-        k.cast("string"),
-    )
-    u_from = S.concat("https://repo.example.org/", name, "-from.zip#from")
-    u_to = S.concat("https://repo.example.org/", name, "-to.zip#to")
+    u_from = S.concat("https://repo.example.org/", NAME, "-from.zip#from")
+    u_to = S.concat("https://repo.example.org/", NAME, "-to.zip#to")
     input_urls = (
         S.when(k % 4 == 0, S.array(u_from, u_to))
         .when(

@@ -1,8 +1,7 @@
 """Miner-mapper queries, batch 10: the round-5 reference-fixture-parity
 mappers get driver-oracle coverage — gemspec YAML, CRAN package-page HTML,
-maven-metadata.xml, and the debian ls-lR visitor. Same fixture strategy as
-earlier batches: wire-format documents are SYNTHESIZED from the `part`
-table column-expressions, pushed through the real parser, and the DuckDB
+maven-metadata.xml, and the debian ls-lR visitor. Fixtures: wire-format
+documents are SYNTHESIZED from the `part_packages` rows, pushed through the real parser, and the DuckDB
 oracle computes the expected values directly from the same source columns
 (so the Spark side must survive the full serialize -> parse round trip to
 match)."""
@@ -11,8 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.collectors import maven_metadata_uris
 from purldb_spark.sources.listings import parse_lslr
@@ -20,40 +19,10 @@ from purldb_spark.sources.lslr_debian import debian_lslr_uris
 from purldb_spark.sources.miners2 import map_gemspec_yaml_docs
 from purldb_spark.sources.miners3 import map_cran_html_docs
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CAST(p_size AS BIGINT) AS size
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.col("p_size").cast("long").alias("size"),
-    )
-
-
 @query(
     "x_gemspec_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'gem' AS type, name, ver AS version,
            'pkg:gem/' || name || '@' || ver AS purl,
            'Gem ' || name AS description,
@@ -76,7 +45,7 @@ def x_gemspec_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependencies with a dropped `>= 0` constraint), parse with
     map_gemspec_yaml_docs, flatten the dependency structs for the hash
     compare."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
     lic_block = S.when(k % 2 == 0, "licenses:\n- MIT\n").otherwise(
         "licenses:\n- MIT\n- Apache-2.0\n"
@@ -151,7 +120,7 @@ def x_gemspec_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_cran_html_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'cran' AS type, name, ver AS version,
            'pkg:cran/' || name || '@' || ver AS purl,
            'R package ' || name AS description,
@@ -175,7 +144,7 @@ def x_cran_html_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape per part row (hex-entity-armored maintainer address included),
     parse with map_cran_html_docs — one output row per source/binary
     download link."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
     # "bo.maint at example.org" armored as &#xHH; entities like CRAN does
     armored = "".join(f"&#x{ord(c):02x};" for c in "<bo.maint at example.org>")
@@ -230,7 +199,7 @@ def x_cran_html_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_maven_metadata_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({PART_PACKAGES_SQL}),
     v AS (
       SELECT k, name, ver || '.' || CAST(n AS VARCHAR) AS version
       FROM base, unnest([0, 1]) AS t(n)
@@ -249,7 +218,7 @@ def x_maven_metadata_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """maven-metadata.xml round trip: render the versioning XML (two
     versions per part row), run the visitor — jar + sources scan-only,
     pom to-visit, purls with the dotted groupId."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     name, ver = S.col("name"), S.col("ver")
     xml = S.concat(
         '<?xml version="1.0" encoding="UTF-8"?>\n<metadata>\n'
@@ -276,7 +245,7 @@ def x_maven_metadata_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_debian_lslr_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'http://ftp.debian.org/debian/pool/main/x/' || name || '/' || f.fn
              AS uri,
            f.purl AS package_url, f.fn AS file_name,
@@ -298,7 +267,7 @@ def x_debian_lslr_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a .deb with an nva-parseable filename, a .dsc, and a non-collectible
     README that must be filtered out), parse with parse_lslr + the
     directory-index visitor."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
     month = S.fn(
         "date_format",

@@ -1,15 +1,15 @@
 """Miner-mapper queries, batch 2: cargo / gem / composer / nuget / golang
-(sources/miners2.py). Same fixture strategy as q_miners — real
-ecosystem-shaped JSON documents built with column concat, mapped by the
-real from_json mappers, expected rows computed directly by the oracle.
+(sources/miners2.py). Fixtures: ecosystem-shaped JSON documents built
+with column concat from the `part_packages` rows, mapped by the real
+from_json mappers, expected rows computed directly by the oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.miners2 import (
     map_cargo_docs,
@@ -19,39 +19,10 @@ from purldb_spark.sources.miners2 import (
     map_packagist_docs,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CAST(p_size AS BIGINT) AS size, md5(p_name) AS cs
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.col("p_size").cast("long").alias("size"),
-        S.md5(S.col("p_name")).alias("cs"),
-    )
-
-
 @query(
     "x_cargo_gem_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'cargo' AS type, name, ver AS version,
            'pkg:cargo/' || name || '@' || ver AS purl,
            'Crate ' || name AS description,
@@ -73,7 +44,7 @@ def x_cargo_gem_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """crates.io + RubyGems v2 documents: version explode with missing-
     dl_path drop, UNKNOWN-license null, published_by name/login fallback,
     licenses-array join."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     name, ver, cs = S.col("name"), S.col("ver"), S.col("cs")
     lic = S.when(S.col("k") % 3 == 0, "MIT").when(S.col("k") % 3 == 1, "UNKNOWN").otherwise(
         "UNKNOWN"
@@ -121,7 +92,7 @@ def x_cargo_gem_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_packagist_nuget_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'composer' AS type, name, ver AS version,
            'pkg:composer/' || name || '@' || ver AS purl,
            'Pkg ' || name AS description,
@@ -151,7 +122,7 @@ def x_packagist_nuget_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packagist version-map explode (git-source vcs_url, license dedup
     sort, empty-license null) + NuGet catalog entries (summary/description
     join rule, comma-split authors checked via the joined scalar)."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     name, ver = S.col("name"), S.col("ver")
     pk_doc = S.concat(
         '{"package":{"language":"PHP","versions":{"', ver,
@@ -204,7 +175,7 @@ def x_packagist_nuget_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_golang_path_parse",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'golang' AS type,
            CASE
              WHEN k % 6 = 5 THEN NULL
@@ -252,7 +223,7 @@ def x_golang_path_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     hosts trim to host/owner/repo with a vcs_repository purl qualifier and
     git+ vcs_url for github; unknown hosts keep the full path and gain no
     qualifier."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, ks = S.col("k"), S.col("k").cast("string")
     path = (
         S.when(k % 6 == 5, S.concat("localpkg", ks))

@@ -1,16 +1,16 @@
 """Miner-mapper queries, batch 3: alpine / cran / conda / sourceforge /
-fdroid (sources/miners3.py). Same fixture strategy as q_miners and
-q_miners2 — real ecosystem-shaped documents built with column concat,
-mapped by the real parsers/mappers, expected rows computed directly by the
-oracle from the generating index.
+fdroid (sources/miners3.py). Fixtures: ecosystem-shaped documents built
+with column concat from the `part_packages` rows, mapped by the real
+parsers/mappers, expected rows computed directly by the oracle from the
+generating index.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.miners3 import (
     map_alpine_blocks,
@@ -20,41 +20,10 @@ from purldb_spark.sources.miners3 import (
     map_sourceforge_docs,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CAST(p_size AS BIGINT) AS size, md5(p_name) AS cs
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.col("p_size").cast("long").alias("size"),
-        S.md5(S.col("p_name")).alias("cs"),
-    )
-
-
 @query(
     "x_alpine_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'apk' AS type, name, ver AS version,
            'pkg:apk/' || name || '@' || ver AS purl,
            'Package ' || name AS description,
@@ -80,7 +49,7 @@ def x_alpine_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-letter field map, Q1-base64 checksum -> sha1 hex, maintainer
     name/email split, colon-less lines skipped; the second block exercises
     the all-fields-missing path."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     name, ver = S.col("name"), S.col("ver")
     maint = (
         S.when(S.col("k") % 3 == 0, "m:Ann Dev <ann@ex.dev>\n")
@@ -117,7 +86,7 @@ def x_alpine_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_cran_conda_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'cran' AS type, name, ver AS version,
            'pkg:cran/' || name || '@' || ver AS purl,
            'R package ' || name AS description,
@@ -158,7 +127,7 @@ def x_cran_conda_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cran.py:196-250) + conda repodata identifier lookup with the
     packages.conda branch, conan-typed dependency purls, and the
     conda-forge info merge (conda.py:15-82)."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     name, ver, cs = S.col("name"), S.col("ver"), S.col("cs")
     k = S.col("k")
 
@@ -251,7 +220,7 @@ def x_cran_conda_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_sourceforge_fdroid_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'sourceforge' AS type,
            CASE WHEN k % 3 = 2 THEN 'n-' || name ELSE name END AS name,
            NULL AS version,
@@ -304,7 +273,7 @@ def x_sourceforge_fdroid_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping (fdroid.py:116-288): en-US description chain with startswith
     dedup, one src row + one apk row per version with source_packages
     linkage."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     name, ver, cs, k = S.col("name"), S.col("ver"), S.col("cs"), S.col("k")
 
     shortname = S.when(k % 3 != 2, S.concat('"shortname":"', name, '",')).otherwise(

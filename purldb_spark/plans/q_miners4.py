@@ -1,7 +1,7 @@
 """Miner-mapper queries, batch 4: bitbucket / gitlab / github / eclipse /
-hex / pub (sources/miners4.py). Same fixture strategy as q_miners,
-q_miners2 and q_miners3 — real ecosystem-shaped JSON documents built with
-column concat, mapped by the real mappers, expected rows computed directly
+hex / pub (sources/miners4.py). Fixtures: ecosystem-shaped JSON documents
+built with column concat from the `part_packages` rows, mapped by the real
+mappers, expected rows computed directly
 by the oracle from the generating index.
 """
 
@@ -9,8 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.miners4 import (
     map_bitbucket_download_docs,
@@ -22,36 +22,22 @@ from purldb_spark.sources.miners4 import (
     map_pub_docs,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         'ns' || CAST(p_partkey % 7 AS VARCHAR) AS ns,
-         CAST(p_size AS BIGINT) AS size, md5(p_name) AS cs
-  FROM part
+# `ns` (the repo owner slug) is read only by this module's fixtures
+_NS_PACKAGES_SQL = f"""
+  SELECT k, name, ver, 'ns' || CAST(k % 7 AS VARCHAR) AS ns, size, cs
+  FROM ({PART_PACKAGES_SQL})
 """
 
 
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
+def _ns_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.concat("ns", (k % 7).cast("string")).alias("ns"),
-        S.col("p_size").cast("long").alias("size"),
-        S.md5(S.col("p_name")).alias("cs"),
+        part_packages(spark, sf_dir),
+        "k",
+        "name",
+        "ver",
+        S.concat("ns", (S.col("k") % 7).cast("string")).alias("ns"),
+        "size",
+        "cs",
     )
 
 
@@ -65,7 +51,7 @@ _BB_COLS = [
 @query(
     "x_bitbucket_gitlab_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({_NS_PACKAGES_SQL}),
     bb AS (
       SELECT *,
              (CASE WHEN k % 2 = 1 THEN 'hg' ELSE 'git' END)
@@ -112,7 +98,7 @@ def x_bitbucket_gitlab_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback to the bb_url, has_issues-gated bug tracker, one row per
     downloads value, and the gitlab purl name taken from the web_url slug
     (NOT the display name)."""
-    b = _base(spark, sf_dir)
+    b = _ns_packages(spark, sf_dir)
     k, name, ns = S.col("k"), S.col("name"), S.col("ns")
 
     scm = S.when(k % 2 == 1, '"scm":"hg",').otherwise("")
@@ -198,7 +184,7 @@ def x_bitbucket_gitlab_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_github_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({_NS_PACKAGES_SQL}),
     gh AS (
       SELECT *, 'https://github.com/' || ns || '/' || name AS hurl,
              'git+git://github.com/' || ns || '/' || name || '.git' AS vcs,
@@ -238,7 +224,7 @@ def x_github_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch-archive fallback rows for repos with neither tags nor downloads
     (the visitor populates branches_download_urls only then,
     github.py:84-195)."""
-    b = _base(spark, sf_dir)
+    b = _ns_packages(spark, sf_dir)
     k, name, ns, ver, cs = (
         S.col("k"), S.col("name"), S.col("ns"), S.col("ver"), S.col("cs")
     )
@@ -299,7 +285,7 @@ _EHP_COLS = [
 @query(
     "x_eclipse_hex_pub_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'eclipse' AS type, name, NULL AS version,
            'pkg:eclipse/' || name AS purl,
            CASE WHEN k % 2 = 0 THEN 'Desc ' || name ELSE 'T ' || name END
@@ -345,7 +331,7 @@ def x_eclipse_hex_pub_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hex.py:20-59: all owners as parties, checksum sha256, repo.hex.pm
     tarball), and pub.dev versions mapping (pub.py:11-78: per-version
     pubspec rows, case-insensitive 'unknown' license dropped)."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver, cs = S.col("k"), S.col("name"), S.col("ver"), S.col("cs")
 
     desc_arr = S.when(

@@ -1,9 +1,9 @@
 """Miner-mapper queries, batch 5: yum/RPM repodata
 (sources/rpm_repodata.py — reference minecode/miners/repomd.py +
-repodata.py + repodata_rpms.py). Same fixture strategy as q_miners3/4 —
-real ecosystem-shaped XML documents built with column concat, parsed by
-the real mappers, expected rows computed directly by the oracle from the
-generating index.
+repodata.py + repodata_rpms.py). Fixtures: ecosystem-shaped XML
+documents built with column concat from the `part_packages` rows, parsed
+by the real mappers, expected rows computed directly by the oracle from
+the generating index.
 
 Each part row is one yum repo carrying a repomd.xml plus the three
 repodata subfiles with TWO packages: a full one (epoch attr, release,
@@ -17,53 +17,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.rpm_repodata import map_repomd_packages
-
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CAST(p_size AS BIGINT) AS size, md5(p_name) AS cs,
-         'ff' || substring(md5(p_name), 3) AS cs2,
-         'https://mirror.ex/repo' || CAST(p_partkey AS VARCHAR) AS base_url,
-         CAST(p_partkey % 2 AS VARCHAR) AS e
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    cs = S.md5(S.col("p_name"))
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.col("p_size").cast("long").alias("size"),
-        cs.alias("cs"),
-        S.concat("ff", S.substring(cs, 3, 32)).alias("cs2"),
-        S.concat("https://mirror.ex/repo", k.cast("string")).alias("base_url"),
-        (k % 2).cast("string").alias("e"),
-    )
 
 
 @query(
     "x_rpm_repodata_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS (
+      SELECT *, 'https://mirror.ex/repo' || CAST(k AS VARCHAR) AS base_url,
+             CAST(k % 2 AS VARCHAR) AS e
+      FROM ({PART_PACKAGES_SQL})
+    )
     SELECT k AS repo_id, 'rpm' AS type, name, 'x86_64' AS arch,
            e || ':' || ver || '-1.el9' AS version,
            'pkg:rpm/' || name || '@' || e || ':' || ver || '-1.el9' AS purl,
@@ -105,7 +72,13 @@ def x_rpm_repodata_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     pkgid) combine, EVR version string (epoch "0" kept — truthy string in
     packagedcode EVR.to_string), download_url absolute/leading-slash/
     relative branches."""
-    b = _base(spark, sf_dir)
+    k = S.col("k")
+    b = S.sel(
+        part_packages(spark, sf_dir),
+        "*",
+        S.concat("https://mirror.ex/repo", k.cast("string")).alias("base_url"),
+        (k % 2).cast("string").alias("e"),
+    )
     name, ver, cs, cs2, e, k = (
         S.col("name"),
         S.col("ver"),

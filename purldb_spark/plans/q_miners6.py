@@ -1,6 +1,6 @@
 """Miner-mapper queries, batch 6: bower / haxe / dockerhub / nix
-(sources/miners6.py). Same fixture strategy as q_miners3/4/5 — real
-ecosystem-shaped JSON documents built with column concat, mapped by the
+(sources/miners6.py). Fixtures: ecosystem-shaped JSON documents built
+with column concat from the `part_packages` rows, mapped by the
 real parsers, expected rows computed directly by the oracle from the
 generating index.
 """
@@ -9,8 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.miners6 import (
     map_bower_docs,
@@ -19,44 +19,10 @@ from purldb_spark.sources.miners6 import (
     map_nix_docs,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CAST(p_size AS BIGINT) AS size, md5(p_name) AS cs,
-         'ff' || substring(md5(p_name), 3) AS cs2
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    cs = S.md5(S.col("p_name"))
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.col("p_size").cast("long").alias("size"),
-        cs.alias("cs"),
-        S.concat("ff", S.substring(cs, 3, 32)).alias("cs2"),
-    )
-
-
 @query(
     "x_bower_haxe_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'bower' AS type, name, ver AS version,
            'pkg:bower/' || name || CASE WHEN version IS NOT NULL THEN '@' || version ELSE '' END AS purl,
            'Bower pkg ' || name AS description,
@@ -91,7 +57,7 @@ def x_bower_haxe_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     vcs; haxelib.json mapping (haxe.py:106-111): tag keywords,
     contributor parties, dependency purls with blank requirements
     dropped, /download/ URL."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
     lic = (
         S.when(k % 3 == 0, '"licenses":["MIT","Apache-2.0","MIT"],')
@@ -165,7 +131,7 @@ def x_bower_haxe_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_dockerhub_nix_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({PART_PACKAGES_SQL}),
     tags(tag, n) AS (VALUES ('latest', 0), ('1.0', 1)),
     docker AS (
       SELECT 'docker' AS type, name,
@@ -238,7 +204,7 @@ def x_dockerhub_nix_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     releases emit), null outputs skipped, alphabetical purl qualifiers
     with empties dropped, narinfo hash join resolving download URLs
     (unresolved -> null)."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver, cs, cs2 = (
         S.col("k"),
         S.col("name"),

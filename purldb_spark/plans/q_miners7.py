@@ -1,6 +1,6 @@
 """Miner-mapper queries, batch 7: cpan / apache (sources/miners7.py).
-Same fixture strategy as earlier batches — ecosystem-shaped documents
-built with column concat, mapped by the real parsers, expected rows
+Fixtures: ecosystem-shaped documents built with column concat from the
+`part_packages` rows, mapped by the real parsers, expected rows
 computed directly by the oracle from the generating index.
 
 The apache downloads fixture uses a dash-free project slug
@@ -14,8 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.miners7 import (
     map_apache_downloads,
@@ -25,42 +25,10 @@ from purldb_spark.sources.miners7 import (
     map_cpan_release_docs,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         md5(p_name) AS cs, 'ff' || substring(md5(p_name), 3) AS cs2
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    cs = S.md5(S.col("p_name"))
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        cs.alias("cs"),
-        S.concat("ff", S.substring(cs, 3, 32)).alias("cs2"),
-    )
-
-
 @query(
     "x_cpan_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'cpan' AS type, name, ver AS version,
            'pkg:cpan/' || name || '@' || ver AS purl,
            'Perl ' || name AS description,
@@ -104,7 +72,7 @@ def x_cpan_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix, nameless hits dropped; .meta mapping (cpan.py:325-395):
     string-vs-list license, dict-vs-string repository, "git:"-only vcs,
     description defaulting to the name, author name/email split."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
 
     rel_lic = (
@@ -217,7 +185,7 @@ def x_cpan_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_apache_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL}),
+    WITH base AS ({PART_PACKAGES_SQL}),
     b2 AS (SELECT *, replace(name, '-', '_') AS dlname FROM base),
     rels(rev, created, n) AS
       (VALUES ('1.0', '2020-01-02', 0), ('2.0', '2020', 1)),
@@ -293,7 +261,7 @@ def x_apache_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     strip; podlings (apache.py:493-509); dist downloads
     (apache.py:513-591): checksum files folded onto their archive row,
     version from the first numeric dash segment."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, cs, cs2 = S.col("k"), S.col("name"), S.col("cs"), S.col("cs2")
     dlname = S.replace(name, "-", "_")
 

@@ -1,50 +1,20 @@
 """Miner-mapper queries, batch 8: alpm / freebsd (sources/miners8.py).
-Same fixture strategy as earlier batches."""
+Fixtures: documents built from the `part_packages` rows, mapped by the
+real parsers, expected rows computed directly by the oracle."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.miners8 import map_alpm_docs, map_freebsd_docs
-
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CAST(p_size AS BIGINT) AS size, md5(p_name) AS cs
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.col("p_size").cast("long").alias("size"),
-        S.md5(S.col("p_name")).alias("cs"),
-    )
-
 
 @query(
     "x_alpm_freebsd_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'alpm' AS type, 'mingw-' || name AS name,
            ver || '-1' AS version,
            'pkg:alpm/mingw-' || name || '@' || ver || '-1' AS purl,
@@ -100,7 +70,7 @@ def x_alpm_freebsd_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     (freebsd.py:98-119): brace/blank lines skipped, arch+origin purl
     qualifiers, licenselogic or/and/single joins, repopath download
     resolution, minimal manifests with null fields."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver, cs = S.col("k"), S.col("name"), S.col("ver"), S.col("cs")
 
     lic2 = S.when(k % 2 == 0, "license = MIT\n").otherwise("")

@@ -1,13 +1,14 @@
 """Miner-mapper queries, batch 9: openwrt / gstreamer and freedesktop /
-googlecode / openssl (sources/miners9.py). Same fixture strategy as
-earlier batches."""
+googlecode / openssl (sources/miners9.py). Fixtures: documents built from
+the `part_packages` rows, mapped by the real parsers, expected rows
+computed directly by the oracle."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
 from purldb_spark.sources.miners9 import (
     map_freedesktop_pages,
@@ -18,40 +19,10 @@ from purldb_spark.sources.miners9 import (
     map_openwrt_docs,
 )
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
-
-_BASE_SQL = f"""
-  SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver,
-         CAST(p_size AS BIGINT) AS size
-  FROM part
-"""
-
-
-def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    return S.sel(
-        p,
-        k.alias("k"),
-        S.concat(
-            S.lower(S.replace(S.col("p_brand"), "#", "-")),
-            "-",
-            k.cast("string"),
-        ).alias("name"),
-        S.concat(
-            (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-        ).alias("ver"),
-        S.col("p_size").cast("long").alias("size"),
-    )
-
-
 @query(
     "x_openwrt_gstreamer_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'openwrt' AS type, 'wrt-' || name AS name, ver || '-2' AS version,
            'pkg:openwrt/wrt-' || name || '@' || ver || '-2' AS purl,
            'OpenWrt pkg ' || name AS description, size,
@@ -82,7 +53,7 @@ def x_openwrt_gstreamer_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     gstreamer dist URL split (gstreamer.py:89-111): last-dash
     rpartition keeping the archive extension in the version (reference
     quirk), dash-less names dropped."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
     deps = S.when(
         k % 2 == 0, "Depends: libc, libubox (>= 1.0)\n"
@@ -162,7 +133,7 @@ def x_openwrt_gstreamer_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_fd_gc_openssl_map",
     oracle=f"""
-    WITH base AS ({_BASE_SQL})
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'freedesktop' AS type, name, NULL AS namespace,
            '0.9' AS version,
            'pkg:freedesktop/' || name || '@0.9' AS purl,
@@ -242,7 +213,7 @@ def x_fd_gc_openssl_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain namespace, nameless v1 docs dropped; openssl listing rows
     (openssl.py:118-157): suffix-stripped versions, constant project
     fields."""
-    b = _base(spark, sf_dir)
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
 
     bug_a = S.when(

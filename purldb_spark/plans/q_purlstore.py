@@ -1,6 +1,7 @@
 """Scan-storage sharding query (functions/purlstore.py — reference
 clearcode/store_scans.py:143-175): per-purl storage path and the
-coordinate-validity gate. The sha512 shard hash is not
+coordinate-validity gate, over purls built from the `part_packages`
+name/version. The sha512 shard hash is not
 DuckDB-expressible — its per-purl assignment and shard balance are
 proven against hashlib in tests/test_purlstore.py instead.
 """
@@ -12,21 +13,14 @@ from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
 from purldb_spark.functions.purlstore import purl_hash, purl_path
+from purldb_spark.plans.part_packages import NAME, PART_PACKAGES_SQL, VER
 from purldb_spark.plans.registry import query
-
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
 
 
 @query(
     "x_purl_store_path",
     oracle=f"""
-    WITH base AS (
-      SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver
-      FROM part
-    )
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'pkg:' ||
              (CASE WHEN k % 3 = 0 THEN 'npm' WHEN k % 3 = 1 THEN 'maven'
                    ELSE 'pypi' END) || '/' ||
@@ -50,14 +44,7 @@ def x_purl_store_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_valid_coordinate."""
     p = load(spark, sf_dir, "part")
     k = F.col("p_partkey")
-    name = F.concat(
-        F.lower(F.replace(F.col("p_brand"), F.lit("#"), F.lit("-"))),
-        F.lit("-"),
-        k.cast("string"),
-    )
-    ver = F.concat(
-        (k % 9).cast("string"), F.lit("."), (k % 5).cast("string"), F.lit(".0")
-    )
+    name, ver = F.expr(NAME.sql), F.expr(VER.sql)
     ptype = (
         F.when(k % 3 == 0, F.lit("npm"))
         .when(k % 3 == 1, F.lit("maven"))

@@ -16,7 +16,8 @@ purl_to_lookups builds, packageurl field equality), one broadcast semi/anti
 join against the catalog on (type, name, version), one broadcast lookup of
 the set uuid — map-side only, no wide shuffle; at 100 TB of request logs the
 catalog side is the big table and the join key (type, name, version) is its
-natural bucketing key."""
+natural bucketing key. Requests and catalog rows use the `part_packages`
+name/version."""
 
 from __future__ import annotations
 
@@ -25,6 +26,7 @@ from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
+from purldb_spark.plans.part_packages import NAME, PART_PACKAGES_SQL, VER
 from purldb_spark.plans.registry import query
 
 # PackageContentType (packagedb/models.py:438-449): name -> integer value
@@ -38,10 +40,6 @@ _CONTENT_TYPES = [
     "DOC",
 ]
 
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
 _CT_NAME_SQL = (
     "["
     + ", ".join(f"'{n}'" for n in _CONTENT_TYPES)
@@ -52,10 +50,7 @@ _CT_NAME_SQL = (
 @query(
     "x_update_packages",
     oracle=f"""
-    WITH base AS (
-      SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver
-      FROM part
-    ),
+    WITH base AS ({PART_PACKAGES_SQL}),
     req AS (
       SELECT k, 'pkg:npm/' || name || '@' || ver AS purl,
              {_CT_NAME_SQL} AS content_type,
@@ -91,19 +86,11 @@ def x_update_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k%5=0) or a fresh set -> 'Updated'."""
     p = load(spark, sf_dir, "part")
     k = S.col("p_partkey")
-    name = S.concat(
-        S.lower(S.replace(S.col("p_brand"), "#", "-")),
-        "-",
-        k.cast("string"),
-    )
-    ver = S.concat(
-        (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-    )
     ct_names = S.array(*_CONTENT_TYPES)
     req = S.sel(
         p,
         k.cast("long").alias("request_id"),
-        S.concat("pkg:npm/", name, "@", ver).alias("purl"),
+        S.concat("pkg:npm/", NAME, "@", VER).alias("purl"),
         S.fn("element_at", ct_names, (k % 7 + 1).cast("int")).alias(
             "content_type"
         ),
@@ -115,8 +102,8 @@ def x_update_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog = S.sel(
         p.filter((k % 3 == 0).sql),
         S.lit("npm").alias("c_type"),
-        name.alias("c_name"),
-        ver.alias("c_version"),
+        NAME.alias("c_name"),
+        VER.alias("c_version"),
     )
     sets = S.sel(
         p.filter((k % 5 == 0).sql),

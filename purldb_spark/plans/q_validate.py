@@ -1,7 +1,8 @@
 """Purl-validation query (operators/validate.py — reference
 packagedb/api.py:1124-1235 PurlValidateViewSet). Fixture covers the
 full response matrix: invalid syntax, no-check, catalog hit, upstream
-version hit/miss, versionless upstream hit/miss, unsupported ecosystem.
+version hit/miss, versionless upstream hit/miss, unsupported ecosystem,
+over purls built from the `part_packages` rows.
 """
 
 from __future__ import annotations
@@ -9,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from purldb_spark.catalog.tables import load
 from purldb_spark.plans import sqltext as S
 from purldb_spark.operators.validate import (
     MSG_NOT_VALID,
@@ -19,21 +19,14 @@ from purldb_spark.operators.validate import (
     MSG_VALID_NOT_EXISTS,
     validate_purls,
 )
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import query
-
-_NAME_SQL = "lower(replace(p_brand, '#', '-')) || '-' || CAST(p_partkey AS VARCHAR)"
-_VER_SQL = (
-    "CAST(p_partkey % 9 AS VARCHAR) || '.' || CAST(p_partkey % 5 AS VARCHAR) || '.0'"
-)
 
 
 @query(
     "x_purl_validate",
     oracle=f"""
-    WITH base AS (
-      SELECT p_partkey AS k, {_NAME_SQL} AS name, {_VER_SQL} AS ver
-      FROM part
-    )
+    WITH base AS ({PART_PACKAGES_SQL})
     SELECT 'npm/' || name || '@' || ver AS purl, FALSE AS valid,
            CAST(NULL AS VARCHAR) AS exists, '{MSG_NOT_VALID}' AS message
     FROM base WHERE k % 8 = 0
@@ -69,17 +62,7 @@ def x_purl_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog-first existence, upstream version membership for the ten
     supported ecosystems, NULL + dedicated message for unsupported
     ones, and the endpoint's literal message strings."""
-    p = load(spark, sf_dir, "part")
-    k = S.col("p_partkey")
-    name = S.concat(
-        S.lower(S.replace(S.col("p_brand"), "#", "-")),
-        "-",
-        k.cast("string"),
-    )
-    ver = S.concat(
-        (k % 9).cast("string"), ".", (k % 5).cast("string"), ".0"
-    )
-    b = S.sel(p, k.alias("k"), name.alias("name"), ver.alias("ver"))
+    b = part_packages(spark, sf_dir)
     k, name, ver = S.col("k"), S.col("name"), S.col("ver")
 
     versioned = S.concat("pkg:npm/", name, "@", ver)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from purldb_spark.plans.part_packages import PART_PACKAGES_SQL, part_packages
 from purldb_spark.plans.registry import ORACLES, QUERIES, load_inventory
 from tests.conftest import SF_CORRECT, assert_same_result
 
@@ -21,6 +22,12 @@ def test_query_matches_oracle(name, spark, oracle):
     else:
         # weaker rows-only check for non-SQL-expressible ops
         assert df.count() >= 0
+
+
+def test_part_packages_matches_oracle_twin(spark, oracle):
+    # the one derivation both sides of every miner/collector oracle share:
+    # drift on either side fails here, before it fails 41 query oracles
+    assert_same_result(part_packages(spark, SF_CORRECT), oracle, PART_PACKAGES_SQL)
 
 
 def test_every_query_has_oracle_or_reason():

@@ -269,14 +269,9 @@ def main() -> None:
         + rows
         + [
             "",
-            "The only intentional nested-loop plans in the registry are the",
-            "labeled ground-truth baselines (`knn_bruteforce`,",
-            "`dedup_embedding_cosine`) and the recall harnesses whose",
-            "ground-truth side IS such a labeled scan (`knn_recall_eval`,",
-            "`knn_recall_fully_trained`, `knn_recall_residual`,",
-            "`embed_recall_blocked` — the approximate sides under evaluation",
-            "stay banded/cell-bounded equi-joins); every other query is",
-            "fenced to equi-join shapes by `tests/test_plan_shapes.py`.",
+            "No registered query plans a nested-loop join or a cartesian",
+            "product: even the exact all-pairs baselines run as blocked-grid",
+            "equi-joins, and `tests/test_plan_shapes.py` fences every plan.",
             "",
         ]
         + _existing_ledger()
