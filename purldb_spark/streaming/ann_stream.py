@@ -36,6 +36,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from purldb_spark.streaming.compact_stream import (
+    append_unseen,
+    current_generation,
+    table_path,
+    writer_lock,
+)
+
 
 def codes_path(index_dir: str) -> str:
     """The live (vec_id, cell, codes) table — resolves through the
@@ -43,11 +50,6 @@ def codes_path(index_dir: str) -> str:
     batches probe and append the compacted generation. Pre-r13 flat
     layouts (parquet files directly under index_dir, no CURRENT) keep
     working: they read as the legacy root until first compaction."""
-    from purldb_spark.streaming.compact_stream import (
-        current_generation,
-        table_path,
-    )
-
     if current_generation(index_dir) is None and (
         os.path.isfile(os.path.join(index_dir, "_SUCCESS"))
         or any(
@@ -89,14 +91,8 @@ def index_batch(
             for si in range(m)
         ],
     )
-    from purldb_spark.streaming.compact_stream import writer_lock
-
     with writer_lock(index_dir):
-        path = codes_path(index_dir)
-        if os.path.isdir(path):
-            seen = spark.read.parquet(path).select("vec_id")
-            rows = rows.join(seen, "vec_id", "left_anti")
-        rows.write.mode("append").parquet(path)
+        append_unseen(spark, rows, codes_path(index_dir), ["vec_id"])
 
 
 def ann_index_sink(

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from purldb_spark.streaming.compact_stream import append_unseen
+
 
 def _tagged(batch_events: DataFrame) -> DataFrame:
     """j14's union-tag projection for one micro-batch."""
@@ -95,10 +97,7 @@ def asof_join_batch(
             (F.col("us") - F.col("view_us")).alias("gap_us"),
         )
     )
-    if os.path.isdir(decisions_dir):
-        done = spark.read.parquet(decisions_dir).select("click_event_id")
-        decisions = decisions.join(done, "click_event_id", "left_anti")
-    decisions.write.mode("append").parquet(decisions_dir)
+    append_unseen(spark, decisions, decisions_dir, ["click_event_id"])
 
     # state <- per-user argmax over (stored ∪ batch views) by the window's
     # own total order (us, event_id); idempotent, so replay needs no ledger

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.plans.q_bloom import _K, _M, _bucket_spark
+from purldb_spark.streaming.compact_stream import append_unseen
 
 
 def _positions(docs: DataFrame) -> DataFrame:
@@ -52,8 +53,7 @@ def bloom_gate_batch(
     set), then fold the batch's new bits in (idempotent via anti-joins)."""
     pos = _positions(batch_docs).localCheckpoint(eager=True)
 
-    have_bits = os.path.isdir(bits_dir)
-    if have_bits:
+    if os.path.isdir(bits_dir):
         bits = spark.read.parquet(bits_dir)
         hits = (
             pos.join(F.broadcast(bits), "b", "left_semi")
@@ -69,17 +69,8 @@ def bloom_gate_batch(
             "doc_id", F.lit(False).alias("maybe_dup")
         )
 
-    if os.path.isdir(decisions_dir):
-        seen = spark.read.parquet(decisions_dir).select("doc_id")
-        decisions = decisions.join(seen, "doc_id", "left_anti")
-    decisions.write.mode("append").parquet(decisions_dir)
-
-    new_bits = pos.select("b").dropDuplicates()
-    if have_bits:
-        new_bits = new_bits.join(
-            spark.read.parquet(bits_dir), "b", "left_anti"
-        )
-    new_bits.write.mode("append").parquet(bits_dir)
+    append_unseen(spark, decisions, decisions_dir, ["doc_id"])
+    append_unseen(spark, pos.select("b").dropDuplicates(), bits_dir, ["b"])
 
 
 def bloom_sink(spark: SparkSession, bits_dir: str, decisions_dir: str):

@@ -68,34 +68,29 @@ unchanged.
 Retention: superseded ``batch=<epoch>`` snapshots are NOT pruned
 implicitly (a reader that resolved the latest epoch pre-write keeps its
 files, mirroring compact_stream's generation contract). A long-running
-stream must call :func:`prune_epochs` periodically — keep >= 2 so the
-below-own-epoch replay read always has a committed predecessor.
+stream must call compact_stream.prune_epochs on ``labels_dir``
+periodically — keep >= 2 so the below-own-epoch replay read always has
+a committed predecessor.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.operators.dedup import connected_components
+from purldb_spark.streaming.compact_stream import epoch_dirs, epoch_path
 
 
 def latest_epoch(labels_dir: str, below: int | None = None) -> int | None:
     """Highest committed epoch id under ``labels_dir`` (optionally only
     epochs strictly below ``below`` — what a replaying batch body reads)."""
-    if not os.path.isdir(labels_dir):
-        return None
     epochs = [
-        int(m.group(1))
-        for d in os.listdir(labels_dir)
-        if (m := re.fullmatch(r"batch=(\d+)", d))
+        e for e in epoch_dirs(labels_dir) if below is None or e < below
     ]
-    if below is not None:
-        epochs = [e for e in epochs if e < below]
     return max(epochs, default=None)
 
 
@@ -106,7 +101,7 @@ def current_labels(
     ep = latest_epoch(labels_dir, below)
     if ep is None:
         return None
-    return spark.read.parquet(os.path.join(labels_dir, f"batch={ep}")).select(
+    return spark.read.parquet(epoch_path(labels_dir, ep)).select(
         "node", "label"
     )
 
@@ -185,19 +180,6 @@ def _read_flushed_thru(deferred_dir: str) -> int | None:
         return None
 
 
-def _deferred_parts(deferred_dir: str, below: int | None = None) -> list[tuple[int, str]]:
-    """(epoch, path) of committed deferral partitions, optionally only
-    epochs strictly below ``below``."""
-    if not os.path.isdir(deferred_dir):
-        return []
-    out = []
-    for d in os.listdir(deferred_dir):
-        m = re.fullmatch(r"batch=(\d+)", d)
-        if m and (below is None or int(m.group(1)) < below):
-            out.append((int(m.group(1)), os.path.join(deferred_dir, d)))
-    return sorted(out)
-
-
 def _pending_deferred(
     spark: SparkSession, deferred_dir: str, below: int
 ) -> DataFrame | None:
@@ -212,9 +194,10 @@ def _pending_deferred(
     own epoch, i.e. below the snapshot their fold lands in)."""
     marker = _read_flushed_thru(deferred_dir)
     if marker is not None and marker < below:
-        for _, path in _deferred_parts(deferred_dir, below=marker):
-            shutil.rmtree(path, ignore_errors=True)
-    parts = [p for _, p in _deferred_parts(deferred_dir, below=below)]
+        for ep, path in epoch_dirs(deferred_dir).items():
+            if ep < marker:
+                shutil.rmtree(path, ignore_errors=True)
+    parts = [p for ep, p in epoch_dirs(deferred_dir).items() if ep < below]
     if not parts:
         return None
     return (
@@ -290,7 +273,7 @@ def merge_pairs_batch(
                 pairs, prior, int(max_component)
             )
             deferred.write.mode("overwrite").parquet(
-                os.path.join(deferred_dir, f"batch={int(epoch_id)}")
+                epoch_path(deferred_dir, epoch_id)
             )
         if flush_edges is not None:
             # deferred edges bypass the cap by construction (they were
@@ -324,7 +307,7 @@ def merge_pairs_batch(
         labels = untouched.unionByName(relabeled).dropDuplicates()
 
     labels.select("node", "label").write.mode("overwrite").parquet(
-        os.path.join(labels_dir, f"batch={int(epoch_id)}")
+        epoch_path(labels_dir, epoch_id)
     )
     if flush_in_band and flush_edges is not None:
         # marker AFTER the snapshot commit: a crash in between replays
@@ -351,8 +334,8 @@ def deferred_stats(
     await GC (r13 verdict item 6)."""
     marker = _read_flushed_thru(deferred_dir)
     parts = [
-        (ep, p)
-        for ep, p in _deferred_parts(deferred_dir)
+        p
+        for ep, p in epoch_dirs(deferred_dir).items()
         if marker is None or ep >= marker
     ]
     out = {
@@ -365,9 +348,7 @@ def deferred_stats(
     }
     if not parts:
         return out
-    raw = spark.read.option("basePath", deferred_dir).parquet(
-        *[p for _, p in parts]
-    )
+    raw = spark.read.option("basePath", deferred_dir).parquet(*parts)
     span = raw.agg(
         F.countDistinct("doc_a", "doc_b").alias("n"),
         F.min("batch").alias("lo"),
@@ -415,7 +396,7 @@ def flush_deferred(
     landed, novel_pairs drops them as co-labeled, the snapshot rewrites
     identically, and the ledger is cleared again. Returns the number of
     edges folded."""
-    parts = [p for _, p in _deferred_parts(deferred_dir)]
+    parts = list(epoch_dirs(deferred_dir).values())
     if not parts:
         return 0
     edges = (
@@ -432,31 +413,6 @@ def flush_deferred(
     with open(os.path.join(deferred_dir, _FLUSHED_THRU), "w") as fh:
         fh.write(str(int(epoch_id)))
     return n
-
-
-def prune_epochs(labels_dir: str, keep: int = 2) -> list[str]:
-    """Best-effort removal of superseded ``batch=<epoch>`` snapshots,
-    keeping the ``keep`` highest epoch ids — the labels-dir twin of
-    compact_stream.prune_generations. Called explicitly by the stream
-    owner (never from inside a batch body), so in-flight readers keep
-    their files; ``keep >= 2`` leaves the replay read a committed
-    predecessor below any epoch that might still re-run."""
-    if keep < 1 or not os.path.isdir(labels_dir):
-        return []
-    epochs = sorted(
-        (
-            int(m.group(1))
-            for d in os.listdir(labels_dir)
-            if (m := re.fullmatch(r"batch=(\d+)", d))
-        ),
-        reverse=True,
-    )
-    removed: list[str] = []
-    for ep in epochs[keep:]:
-        path = os.path.join(labels_dir, f"batch={ep}")
-        shutil.rmtree(path, ignore_errors=True)
-        removed.append(path)
-    return removed
 
 
 def cc_sink(

@@ -36,10 +36,11 @@ cache already holds.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from purldb_spark.streaming.compact_stream import epoch_dirs, epoch_path
 
 
 def chunk_batch(batch_docs: DataFrame) -> DataFrame:
@@ -88,16 +89,9 @@ def index_chunk_batch(
     # against its rows would drop rows the overwrite below is about to
     # restore). Listing batch=* dirs and reading only the others never
     # touches the suspect files; basePath keeps the partition column.
-    other_parts = (
-        [
-            os.path.join(chunks_path, d)
-            for d in os.listdir(chunks_path)
-            if (m := re.fullmatch(r"batch=(\d+)", d))
-            and int(m.group(1)) != int(epoch_id)
-        ]
-        if os.path.isdir(chunks_path)
-        else []
-    )
+    other_parts = [
+        p for ep, p in epoch_dirs(chunks_path).items() if ep != int(epoch_id)
+    ]
     if other_parts:
         idx = spark.read.option("basePath", chunks_path).parquet(*other_parts)
         indexed_docs = idx.select("doc_id").dropDuplicates()
@@ -127,12 +121,8 @@ def index_chunk_batch(
             "chunk_len",
         )
     )
-    worklist.write.mode("overwrite").parquet(
-        os.path.join(worklist_dir, f"batch={int(epoch_id)}")
-    )
-    chunks.write.mode("overwrite").parquet(
-        os.path.join(chunks_path, f"batch={int(epoch_id)}")
-    )
+    worklist.write.mode("overwrite").parquet(epoch_path(worklist_dir, epoch_id))
+    chunks.write.mode("overwrite").parquet(epoch_path(chunks_path, epoch_id))
 
 
 def chunk_sink(spark: SparkSession, index_dir: str, worklist_dir: str):

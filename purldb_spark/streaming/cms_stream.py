@@ -25,12 +25,11 @@ tests/test_cms_stream.py), in any epoch order, with replays no-ops.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.plans.q_sketch import _CMS_COL_SPARK, _CMS_D
+from purldb_spark.streaming.compact_stream import epoch_path
 
 
 def cms_cells(batch_docs: DataFrame) -> DataFrame:
@@ -64,9 +63,7 @@ def cms_merge_batch(
     partial = cms_cells(batch_docs).localCheckpoint(eager=True)
     # plain-parquet caveat as everywhere in this package: production state
     # tables use a transactional format; recovery here re-runs one epoch.
-    partial.write.mode("overwrite").parquet(
-        os.path.join(partials_dir, f"batch={int(epoch_id)}")
-    )
+    partial.write.mode("overwrite").parquet(epoch_path(partials_dir, epoch_id))
 
 
 def cms_cells_total(spark: SparkSession, partials_dir: str) -> DataFrame:

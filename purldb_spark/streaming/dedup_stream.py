@@ -50,6 +50,12 @@ from purldb_spark.operators.dedup import (
     verify_jaccard,
     word_shingles,
 )
+from purldb_spark.streaming.compact_stream import (
+    append_unseen,
+    exact_index_path,
+    index_paths,
+    writer_lock,
+)
 
 
 def index_new_batch(
@@ -73,12 +79,6 @@ def index_new_batch(
     generation). Appends are short, so the lock adds no steady-state
     stall; see compact_stream's module docstring for the 100 TB
     (table-format transaction) shape."""
-    from purldb_spark.streaming.compact_stream import (
-        exact_index_path,
-        index_paths,
-        writer_lock,
-    )
-
     with writer_lock(index_dir, timeout=lock_timeout):
         # resolve through the generation pointer (compact_stream): appends
         # land in the live generation, so a post-compaction batch extends
@@ -168,10 +168,7 @@ def index_new_batch(
             pairs = near_pairs.unionByName(exact_pairs)
         else:
             pairs = exact_pairs
-        if os.path.isdir(pairs_dir):
-            seen = spark.read.parquet(pairs_dir).select("new_id", "index_id")
-            pairs = pairs.join(seen, ["new_id", "index_id"], "left_anti")
-        pairs.write.mode("append").parquet(pairs_dir)
+        append_unseen(spark, pairs, pairs_dir, ["new_id", "index_id"])
 
         bands_new.write.mode("append").parquet(bands_path)
         sh_new.write.mode("append").parquet(sh_path)

@@ -41,6 +41,7 @@ from purldb_spark.plans.q_select import (
     _FUN_MIN_MWL,
     _FUN_MIN_W,
 )
+from purldb_spark.streaming.compact_stream import append_unseen
 
 # the batch face's allowlist tuple IS the streaming gate — a q_select edit
 # can no longer desynchronize the two funnels (or the oracle, which derives
@@ -80,8 +81,7 @@ def funnel_gate_batch(
     batch's hashes into the table (all idempotent via anti-joins)."""
     g = _gated(batch_docs).localCheckpoint(eager=True)
 
-    have_seen = os.path.isdir(seen_dir)
-    if have_seen:
+    if os.path.isdir(seen_dir):
         seen = spark.read.parquet(seen_dir)
         dup = g.join(seen, "h", "left_semi").select("doc_id")
         g4 = g.join(dup, "doc_id", "left_anti").filter("first_in_batch")
@@ -103,17 +103,8 @@ def funnel_gate_batch(
         ).alias("admitted"),
     )
 
-    if os.path.isdir(decisions_dir):
-        done = spark.read.parquet(decisions_dir).select("doc_id")
-        decisions = decisions.join(done, "doc_id", "left_anti")
-    decisions.write.mode("append").parquet(decisions_dir)
-
-    new_hashes = g.select("h").dropDuplicates()
-    if have_seen:
-        new_hashes = new_hashes.join(
-            spark.read.parquet(seen_dir), "h", "left_anti"
-        )
-    new_hashes.write.mode("append").parquet(seen_dir)
+    append_unseen(spark, decisions, decisions_dir, ["doc_id"])
+    append_unseen(spark, g.select("h").dropDuplicates(), seen_dir, ["h"])
 
 
 def funnel_sink(spark: SparkSession, seen_dir: str, decisions_dir: str):

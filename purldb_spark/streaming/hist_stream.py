@@ -23,12 +23,11 @@ over the union of all batches, in any epoch order, with replays no-ops
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.plans.q_sketch import _HQ_BIN_CENTS
+from purldb_spark.streaming.compact_stream import epoch_path
 
 
 def hist_bins(batch_events: DataFrame) -> DataFrame:
@@ -55,9 +54,7 @@ def hist_merge_batch(
     OWN partition (overwrite). A replayed epoch recomputes the same bins
     -> same rows -> same partition: idempotent by construction."""
     partial = hist_bins(batch_events).localCheckpoint(eager=True)
-    partial.write.mode("overwrite").parquet(
-        os.path.join(partials_dir, f"batch={int(epoch_id)}")
-    )
+    partial.write.mode("overwrite").parquet(epoch_path(partials_dir, epoch_id))
 
 
 def hist_total(spark: SparkSession, partials_dir: str) -> DataFrame:

@@ -30,12 +30,11 @@ partials table never stores fact rows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.plans.q_joins import _BIN_CENTS
+from purldb_spark.streaming.compact_stream import epoch_path
 
 
 def interval_bins(part: DataFrame) -> DataFrame:
@@ -103,9 +102,7 @@ def interval_merge_batch(
     # plain-parquet overwrite of the single partition dir is the same
     # non-crash-atomic caveat as hll_stream: production uses Delta/Iceberg
     # or staging+rename; recovery here is re-running the one epoch.
-    partial.write.mode("overwrite").parquet(
-        os.path.join(partials_dir, f"batch={int(epoch_id)}")
-    )
+    partial.write.mode("overwrite").parquet(epoch_path(partials_dir, epoch_id))
 
 
 def interval_totals(spark: SparkSession, partials_dir: str) -> DataFrame:

@@ -21,11 +21,11 @@ assign under those. This keeps the per-batch work one map-only argmin
 pass + one bounded combine — no iteration inside the stream.
 
 The ledger grows one k x dim shard per epoch; ``compact_kmeans_shards``
-rolls the tail up through the SAME generation-pointer + writer-flock
-protocol as every other persistent index (compact_stream): fold all
-shards except the newest, carry the newest as its own partition (the
-one epoch Structured Streaming can replay must keep its own partition
-to overwrite), atomically swap CURRENT.
+rolls the tail up with compact_stream.compact_shards on the (cluster,
+pos) grid, the same fold nb_stream uses: fold all shards except the
+newest, carry the newest as its own partition (the one epoch Structured
+Streaming can replay must keep its own partition to overwrite),
+atomically swap CURRENT.
 
 At 100 TB: the per-batch combine ships at most k x dim x partitions
 integer rows; model reads aggregate k x dim rows however large the
@@ -35,26 +35,21 @@ same O(model) driver-traffic contract as every trainer here.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.operators.kmeans import assign_expr
 from purldb_spark.streaming.compact_stream import (
-    current_generation,
+    SHARDS,
+    compact_shards,
+    epoch_path,
+    shard_totals,
+    table_path,
     writer_lock,
 )
 
-
-def _shards_root(stats_dir: str) -> str:
-    """Live shard table directory through the generation pointer
-    (nb_stream._shards_root's rule)."""
-    gen = current_generation(stats_dir)
-    root = (
-        stats_dir if gen is None else os.path.join(stats_dir, f"gen={gen}")
-    )
-    return os.path.join(root, "shards")
+# the (key, sum) columns of the per-cell statistics grid
+_GRID = (("cluster", "pos"), ("n", "sum_e6"))
 
 
 def batch_cell_stats(
@@ -105,7 +100,7 @@ def train_kmeans_batch(
         batch_cell_stats(batch, vec_col, centroids).write.mode(
             "overwrite"
         ).parquet(
-            os.path.join(_shards_root(stats_dir), f"batch={int(epoch_id)}")
+            epoch_path(table_path(stats_dir, SHARDS), epoch_id)
         )
 
 
@@ -113,12 +108,7 @@ def current_kmeans_stats(spark: SparkSession, stats_dir: str) -> DataFrame:
     """The up-to-date statistics: SUM of every shard on the (cluster,
     pos) grid — equal to a single pass over all ingested batches by the
     monoid algebra."""
-    root = _shards_root(stats_dir)
-    shards = spark.read.option("basePath", root).parquet(root)
-    return shards.groupBy("cluster", "pos").agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("sum_e6").cast("long").alias("sum_e6"),
-    )
+    return shard_totals(spark, stats_dir, *_GRID)
 
 
 def refreshed_centroids(
@@ -158,52 +148,7 @@ def kmeans_sink(
 def compact_kmeans_shards(
     spark: SparkSession, stats_dir: str, lock_timeout: float = 60.0
 ) -> int | None:
-    """Roll the shard ledger into a fresh generation — fold every shard
-    except the newest into one base partition, carry the newest
-    unchanged (the replayable epoch keeps its own partition), swap
-    CURRENT atomically under the writer flock (compact_nb_shards'
-    protocol on the k-means grid)."""
-    with writer_lock(stats_dir, timeout=lock_timeout):
-        root = _shards_root(stats_dir)
-        if not os.path.isdir(root):
-            return None
-        eps = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(root)
-            if d.startswith("batch=")
-        )
-        if len(eps) < 2:
-            return None
-        newest = eps[-1]
-        older = [os.path.join(root, f"batch={e}") for e in eps[:-1]]
-        base = (
-            spark.read.option("basePath", root)
-            .parquet(*older)
-            .groupBy("cluster", "pos")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("sum_e6").cast("long").alias("sum_e6"),
-            )
-        )
-        gen = (current_generation(stats_dir) or 0) + 1
-        gen_shards = os.path.join(stats_dir, f"gen={gen}", "shards")
-        base.write.mode("overwrite").parquet(
-            os.path.join(gen_shards, f"batch={eps[-2]}")
-        )
-        spark.read.parquet(
-            os.path.join(root, f"batch={newest}")
-        ).write.mode("overwrite").parquet(
-            os.path.join(gen_shards, f"batch={newest}")
-        )
-        tmp = os.path.join(stats_dir, ".CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(gen))
-        os.replace(tmp, os.path.join(stats_dir, "CURRENT"))
-        # the old generation is dead after the swap: best-effort GC (a
-        # crash here leaves garbage a later compaction removes, never a
-        # wrong read — readers resolve through the pointer)
-        import shutil
-
-        old = root if os.path.dirname(root) == stats_dir else os.path.dirname(root)
-        shutil.rmtree(old, ignore_errors=True)
-        return gen
+    """Roll the shard ledger into a fresh generation
+    (compact_stream.compact_shards on the k-means grid). Returns the new
+    generation id, or None when there are fewer than two shards."""
+    return compact_shards(spark, stats_dir, *_GRID, lock_timeout=lock_timeout)

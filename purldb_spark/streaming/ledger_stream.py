@@ -2,9 +2,8 @@
 policy the band-index compaction applies.
 
 compact_stream.compact_band_index takes a ``retained_docs`` frame and
-applies it with one semi-join; its docstring says the policy "lives with
-the document LEDGER (which knows ingest times)". This module is that
-ledger: per micro-batch it records which documents arrived in which
+applies it with one semi-join; the policy lives with the document
+LEDGER, which knows ingest times. This module is that ledger: per micro-batch it records which documents arrived in which
 epoch, and ``retained_docs`` turns a retention window (keep the last K
 epochs, or everything since epoch E) into exactly the frame compaction
 wants. compaction_retention_plan (plans/q_compact_plan.py) is the
@@ -19,7 +18,9 @@ the replay that re-runs it BEFORE the stream advances. Maintenance reads
 (``retained_docs`` feeding a compaction) run between batches — the same
 quiesce point the band index's writer_lock serializes — so they only
 ever see committed partitions; the partition listing is explicit
-(path-level, never a whole-tree read) to keep the selector logic exact.
+(compact_stream.epoch_dirs: path-level, never a whole-tree read) to keep
+the selector logic exact, and compact_stream.prune_epochs drops
+partitions below the largest retention window the owner still needs.
 
 At 100 TB the ledger is the ingest pipeline's manifest table (epoch ->
 partition, a metadata-scale row count); ``retained_docs`` is partition
@@ -30,23 +31,10 @@ foreachBatch sink in this package.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _epoch_dirs(ledger_dir: str) -> dict[int, str]:
-    """Committed ``batch=<epoch>`` partitions, path-listed (never a
-    whole-tree read — a crashed epoch's torn files stay untouched)."""
-    if not os.path.isdir(ledger_dir):
-        return {}
-    return {
-        int(m.group(1)): os.path.join(ledger_dir, d)
-        for d in os.listdir(ledger_dir)
-        if (m := re.fullmatch(r"batch=(\d+)", d))
-    }
+from purldb_spark.streaming.compact_stream import epoch_dirs, epoch_path
 
 
 def record_batch(
@@ -62,7 +50,7 @@ def record_batch(
     batch_docs.select(
         F.col(id_col).cast("long").alias("doc_id")
     ).dropDuplicates().write.mode("overwrite").parquet(
-        os.path.join(ledger_dir, f"batch={int(epoch_id)}")
+        epoch_path(ledger_dir, epoch_id)
     )
 
 
@@ -81,42 +69,23 @@ def retained_docs(
     compaction's "keep everything" convention."""
     if (keep_epochs is None) == (min_epoch is None):
         raise ValueError("give exactly one of keep_epochs / min_epoch")
-    dirs = _epoch_dirs(ledger_dir)
+    dirs = epoch_dirs(ledger_dir)
     if not dirs:
         return None
     if keep_epochs is not None:
         if keep_epochs < 1:
             raise ValueError("keep_epochs must be >= 1")
-        keep = sorted(dirs, reverse=True)[:keep_epochs]
+        keep = list(dirs)[-keep_epochs:]
     else:
         keep = [e for e in dirs if e >= min_epoch]
         if not keep:
             return spark.range(0).select(F.col("id").alias("doc_id"))
     return (
-        spark.read.option(
-            "basePath", ledger_dir
-        ).parquet(*[dirs[e] for e in sorted(keep)])
+        spark.read.option("basePath", ledger_dir)
+        .parquet(*[dirs[e] for e in keep])
         .select("doc_id")
         .dropDuplicates()
     )
-
-
-def prune_ledger(ledger_dir: str, keep_epochs: int) -> list[str]:
-    """Best-effort removal of ledger partitions below the ``keep_epochs``
-    highest — the ledger-dir twin of cc_stream.prune_epochs. The caller
-    must keep at least its largest retention window (a pruned epoch can
-    no longer contribute docs to ``retained_docs``); called explicitly
-    by the stream owner, never from a batch body."""
-    import shutil
-
-    if keep_epochs < 1:
-        raise ValueError("keep_epochs must be >= 1")
-    dirs = _epoch_dirs(ledger_dir)
-    removed: list[str] = []
-    for ep in sorted(dirs, reverse=True)[keep_epochs:]:
-        shutil.rmtree(dirs[ep], ignore_errors=True)
-        removed.append(dirs[ep])
-    return removed
 
 
 def ledger_sink(spark: SparkSession, ledger_dir: str, id_col: str = "doc_id"):

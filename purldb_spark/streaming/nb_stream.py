@@ -10,16 +10,17 @@ idempotence is the epoch-partition overwrite: a replayed micro-batch
 recomputes the identical shard and rewrites its own partition, changing
 nothing.
 
-The ledger grows by one C x B shard per epoch; ``compact_nb_shards``
-rolls the tail up through the SAME generation-pointer + writer-flock
-protocol every other persistent index uses (compact_stream): fold all
-shards EXCEPT the newest into one base partition in a fresh gen=<N+1>
-directory, carry the newest shard as its own partition, atomically
-swap CURRENT. Carrying the newest preserves the replay contract — the
-only epoch Structured Streaming can replay is the last one, and its
-partition still exists to be overwritten; folding it into the base
-would double-count on replay. Readers resolve through the pointer, so
-a crash anywhere before the swap leaves the old generation intact.
+Shards live in the ``shards`` table of the stats dir, epoch-partitioned
+inside a generation (compact_stream owns both layouts). The ledger grows
+by one C x B shard per epoch; ``compact_nb_shards`` rolls the tail up
+with compact_stream.compact_shards on the (label, bucket) grid: fold all
+shards EXCEPT the newest into one base partition of a fresh generation,
+carry the newest shard as its own partition, atomically swap CURRENT.
+Carrying the newest preserves the replay contract — the only epoch
+Structured Streaming can replay is the last one, and its partition
+still exists to be overwritten; folding it into the base would
+double-count on replay. Readers resolve through the pointer, so a crash
+anywhere before the swap leaves the old generation intact.
 
 At 100 TB: tokenize is map-only inside the micro-batch; the per-batch
 combine ships at most classes x buckets x partitions rows; model reads
@@ -29,31 +30,20 @@ produced them. The 17th face in the streaming catalogue (DESIGN.md).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from purldb_spark.operators.nb import nb_train
 from purldb_spark.streaming.compact_stream import (
-    current_generation,
+    SHARDS,
+    compact_shards,
+    epoch_path,
+    shard_totals,
+    table_path,
     writer_lock,
 )
 
-
-def _shards_root(stats_dir: str) -> str:
-    """The live shard TABLE directory — stats_dir/shards before any
-    compaction, stats_dir/gen=<N>/shards once a CURRENT pointer exists
-    (compact_stream.table_path's resolution rule). Shards live in a
-    table SUBDIR, never at stats_dir root: a root-level batch=* layout
-    would make partition discovery collide with gen=<N> directories the
-    moment a compaction starts writing one."""
-    gen = current_generation(stats_dir)
-    root = (
-        stats_dir if gen is None else os.path.join(stats_dir, f"gen={gen}")
-    )
-    return os.path.join(root, "shards")
+# the (key, sum) columns of the class x bucket count grid
+_GRID = (("label", "bucket"), ("token_cnt", "class_docs", "class_tokens"))
 
 
 def train_nb_batch(
@@ -74,7 +64,7 @@ def train_nb_batch(
     Resolve->write holds compact_stream's :func:`writer_lock`, matching
     every other append face (dedup/ann/simhash streams): without it a
     batch racing ``compact_nb_shards`` could resolve the OLD generation
-    root, have its freshly written shard rmtree'd by the swap (or land
+    root, have its freshly written shard pruned after the swap (or land
     it where readers no longer resolve), and silently lose the epoch's
     counts — the stream checkpoint advances, so the batch is never
     replayed. The lock covers the counting agg too; shards are tiny
@@ -83,7 +73,7 @@ def train_nb_batch(
         nb_train(
             spark, batch, label_col, text_col, n_buckets, n_classes
         ).write.mode("overwrite").parquet(
-            os.path.join(_shards_root(stats_dir), f"batch={int(epoch_id)}")
+            epoch_path(table_path(stats_dir, SHARDS), epoch_id)
         )
 
 
@@ -92,13 +82,7 @@ def current_nb_model(spark: SparkSession, stats_dir: str) -> DataFrame:
     grid — equal to a single-pass train over all ingested batches by
     the monoid algebra (nb_merge_shards proves this engine-checked).
     Returns the same schema as nb_train."""
-    root = _shards_root(stats_dir)
-    shards = spark.read.option("basePath", root).parquet(root)
-    return shards.groupBy("label", "bucket").agg(
-        F.sum("token_cnt").cast("long").alias("token_cnt"),
-        F.sum("class_docs").cast("long").alias("class_docs"),
-        F.sum("class_tokens").cast("long").alias("class_tokens"),
-    )
+    return shard_totals(spark, stats_dir, *_GRID)
 
 
 def nb_sink(
@@ -129,54 +113,7 @@ def nb_sink(
 def compact_nb_shards(
     spark: SparkSession, stats_dir: str, lock_timeout: float = 60.0
 ) -> int | None:
-    """Roll the shard ledger up into a fresh generation (module
-    docstring): fold every shard EXCEPT the newest into one base
-    partition (keyed by the highest folded epoch), carry the newest
-    shard unchanged so the one replayable epoch still overwrites its
-    own partition, then atomically swap the CURRENT pointer. Holds the
-    writer flock across read -> write -> swap (same lease as every
-    band/ANN index). Returns the new generation id, or None when there
-    are fewer than two shards to fold."""
-    with writer_lock(stats_dir, timeout=lock_timeout):
-        root = _shards_root(stats_dir)
-        if not os.path.isdir(root):
-            return None
-        eps = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(root)
-            if d.startswith("batch=")
-        )
-        if len(eps) < 2:
-            return None
-        newest = eps[-1]
-        older = [os.path.join(root, f"batch={e}") for e in eps[:-1]]
-        old_root = root
-        base = (
-            spark.read.option("basePath", root)
-            .parquet(*older)
-            .groupBy("label", "bucket")
-            .agg(
-                F.sum("token_cnt").cast("long").alias("token_cnt"),
-                F.sum("class_docs").cast("long").alias("class_docs"),
-                F.sum("class_tokens").cast("long").alias("class_tokens"),
-            )
-        )
-        gen = (current_generation(stats_dir) or 0) + 1
-        gen_shards = os.path.join(stats_dir, f"gen={gen}", "shards")
-        base.write.mode("overwrite").parquet(
-            os.path.join(gen_shards, f"batch={eps[-2]}")
-        )
-        spark.read.parquet(
-            os.path.join(root, f"batch={newest}")
-        ).write.mode("overwrite").parquet(
-            os.path.join(gen_shards, f"batch={newest}")
-        )
-        tmp = os.path.join(stats_dir, ".CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(gen))
-        os.replace(tmp, os.path.join(stats_dir, "CURRENT"))
-        # the old generation is dead after the swap: best-effort GC (a
-        # crash here leaves garbage a later compaction removes, never a
-        # wrong read — readers resolve through the pointer)
-        shutil.rmtree(old_root, ignore_errors=True)
-        return gen
+    """Roll the shard ledger up into a fresh generation
+    (compact_stream.compact_shards on the NB grid). Returns the new
+    generation id, or None when there are fewer than two shards."""
+    return compact_shards(spark, stats_dir, *_GRID, lock_timeout=lock_timeout)

@@ -32,23 +32,19 @@ not per frame; assignments append map-side. Driver traffic is zero.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.streaming.compact_stream import (
-    current_generation,
+    epoch_path,
+    prune_generations,
+    publish_generation,
+    table_path,
     writer_lock,
 )
 
 BOUNDARY_E3 = 64000  # same jump threshold as the batch chain
-
-
-def _state_root(stats_dir: str) -> str:
-    gen = current_generation(stats_dir)
-    root = stats_dir if gen is None else os.path.join(stats_dir, f"gen={gen}")
-    return os.path.join(root, "state")
 
 
 def _assign_root(stats_dir: str) -> str:
@@ -62,7 +58,7 @@ _STATE_SCHEMA = (
 
 
 def _read_state(spark: SparkSession, stats_dir: str) -> DataFrame:
-    root = _state_root(stats_dir)
+    root = table_path(stats_dir, "state")
     if os.path.isdir(root):
         return spark.read.parquet(root)
     return spark.createDataFrame([], _STATE_SCHEMA)
@@ -161,24 +157,17 @@ def segment_shots_batch(
         assignments = assignments.localCheckpoint(eager=True)
         new_state = new_state.localCheckpoint(eager=True)
         assignments.write.mode("overwrite").parquet(
-            os.path.join(_assign_root(stats_dir), f"batch={int(epoch_id)}")
+            epoch_path(_assign_root(stats_dir), epoch_id)
         )
-        gen = (current_generation(stats_dir) or 0) + 1
-        new_state.withColumn(
-            "last_epoch", F.lit(int(epoch_id)).cast("long")
-        ).write.mode("overwrite").parquet(
-            os.path.join(stats_dir, f"gen={gen}", "state")
+        publish_generation(
+            stats_dir,
+            lambda gen_root: new_state.withColumn(
+                "last_epoch", F.lit(int(epoch_id)).cast("long")
+            ).write.mode("overwrite").parquet(os.path.join(gen_root, "state")),
         )
-        old_root = _state_root(stats_dir)
-        tmp = os.path.join(stats_dir, ".CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(gen))
-        os.replace(tmp, os.path.join(stats_dir, "CURRENT"))
-        # dead generation after the swap: best-effort GC (readers resolve
-        # through the pointer, so a crash here never yields a wrong read)
-        old_gen_dir = os.path.dirname(old_root)
-        if old_gen_dir != stats_dir and os.path.isdir(old_gen_dir):
-            shutil.rmtree(old_gen_dir, ignore_errors=True)
+        # the old state generation is dead after the swap; the root-level
+        # assignments table is no generation's and stays
+        prune_generations(stats_dir)
 
 
 def current_assignments(spark: SparkSession, stats_dir: str) -> DataFrame:

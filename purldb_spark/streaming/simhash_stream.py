@@ -46,6 +46,11 @@ from pyspark.sql import functions as F
 
 from purldb_spark.operators.dedup import word_shingles
 from purldb_spark.operators.simhash_wide import band_exprs, simhash_wide
+from purldb_spark.streaming.compact_stream import (
+    append_unseen,
+    table_path,
+    writer_lock,
+)
 
 
 def batch_fingerprints(batch_docs: DataFrame) -> DataFrame:
@@ -76,8 +81,6 @@ def index_simhash_batch(
 ) -> None:
     """One micro-batch body (module docstring). Decisions carry
     (new_id, index_id, hamming)."""
-    from purldb_spark.streaming.compact_stream import table_path, writer_lock
-
     bands_new = _banded(batch_fingerprints(batch_docs)).localCheckpoint(
         eager=True  # one fingerprint aggregation; probe + append uses
     )
@@ -142,10 +145,7 @@ def index_simhash_batch(
             pairs.filter(F.col("hamming") <= max_hamming)
             .dropDuplicates(["new_id", "index_id"])
         )
-        if os.path.isdir(pairs_dir):
-            seen = spark.read.parquet(pairs_dir).select("new_id", "index_id")
-            pairs = pairs.join(seen, ["new_id", "index_id"], "left_anti")
-        pairs.write.mode("append").parquet(pairs_dir)
+        append_unseen(spark, pairs, pairs_dir, ["new_id", "index_id"])
 
         bands_new.write.mode("append").parquet(bands_path)
 

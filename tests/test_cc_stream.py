@@ -145,7 +145,10 @@ def test_novel_pairs_keeps_merging_and_unlabeled_edges(spark):
 def test_prune_epochs_keeps_latest_committed(spark, tmp_path):
     import os
 
-    from purldb_spark.streaming.cc_stream import latest_epoch, prune_epochs
+    import pytest
+
+    from purldb_spark.streaming.cc_stream import latest_epoch
+    from purldb_spark.streaming.compact_stream import prune_epochs
 
     labels_dir = str(tmp_path / "labels")
     for epoch, batch in enumerate([BATCH1, BATCH2, BATCH3]):
@@ -153,6 +156,8 @@ def test_prune_epochs_keeps_latest_committed(spark, tmp_path):
             spark, spark.createDataFrame(batch, SCHEMA), labels_dir, epoch
         )
     want = _labels(spark, labels_dir)
+    with pytest.raises(ValueError):
+        prune_epochs(labels_dir, keep=0)
     removed = prune_epochs(labels_dir, keep=2)
     assert removed == [os.path.join(labels_dir, "batch=0")]
     assert latest_epoch(labels_dir) == 2

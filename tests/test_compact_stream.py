@@ -289,3 +289,29 @@ def test_legacy_bare_writer_lock_live_holder_survives(tmp_path):
     open(legacy, "w").write("not-a-pid")
     with writer_lock(index_dir):
         assert os.path.exists(legacy)
+
+
+def test_state_layout_is_spelled_only_in_compact_stream():
+    """Layout fence: the epoch-partition path format, the epoch-partition
+    listing pattern and the CURRENT pointer swap live in compact_stream
+    alone — every other streaming module calls epoch_path / epoch_dirs /
+    publish_generation instead of keeping its own copy."""
+    import glob
+    import re
+
+    import purldb_spark.streaming as pkg
+
+    fences = {
+        "batch= path format": re.compile(r"""f["']batch=\{"""),
+        "batch= listing pattern": re.compile(
+            r"""batch=\(\\d|startswith\(\s*["']batch="""
+        ),
+        "CURRENT os.replace": re.compile(r"os\.replace\("),
+    }
+    owners: dict[str, list[str]] = {name: [] for name in fences}
+    for path in sorted(glob.glob(os.path.join(pkg.__path__[0], "*.py"))):
+        src = open(path).read()
+        for name, rx in fences.items():
+            if rx.search(src):
+                owners[name].append(os.path.basename(path))
+    assert owners == {name: ["compact_stream.py"] for name in fences}

@@ -89,9 +89,9 @@ def test_full_streaming_stack_with_midstream_compaction(spark, tmp_path):
         verify_jaccard,
         word_shingles,
     )
-    from purldb_spark.streaming.cc_stream import prune_epochs
     from purldb_spark.streaming.compact_stream import (
         compact_band_index,
+        prune_epochs,
         prune_generations,
     )
 

@@ -112,14 +112,14 @@ def test_ledger_replay_idempotent_and_torn_partition_heals(spark, tmp_path):
 
 
 def test_prune_ledger_keeps_latest_epochs(spark, tmp_path):
-    from purldb_spark.streaming.ledger_stream import prune_ledger
+    from purldb_spark.streaming.compact_stream import prune_epochs
 
     ledger_dir = str(tmp_path / "ledger")
     for epoch, doc in enumerate([(1, OLD), (2, MID), (3, NEW)]):
         record_batch(
             spark, spark.createDataFrame([doc], SCHEMA), ledger_dir, epoch
         )
-    removed = prune_ledger(ledger_dir, keep_epochs=2)
+    removed = prune_epochs(ledger_dir, keep=2)
     assert len(removed) == 1 and removed[0].endswith("batch=0")
     assert {
         r.doc_id

@@ -96,10 +96,8 @@ def test_compaction_preserves_model_and_replay_contract(spark, tmp_path):
     without double-counting, and a second compaction chains."""
     import os
 
-    from purldb_spark.streaming.nb_stream import (
-        _shards_root,
-        compact_nb_shards,
-    )
+    from purldb_spark.streaming.compact_stream import table_path
+    from purldb_spark.streaming.nb_stream import compact_nb_shards
 
     stats_dir = str(tmp_path / "stats")
     for ep, (lo, hi) in enumerate(((0, 2), (2, 4), (4, 6))):
@@ -116,7 +114,7 @@ def test_compaction_preserves_model_and_replay_contract(spark, tmp_path):
 
     gen = compact_nb_shards(spark, stats_dir)
     assert gen == 1
-    root = _shards_root(stats_dir)
+    root = table_path(stats_dir, "shards")
     assert root.endswith("gen=1/shards")
     parts = sorted(d for d in os.listdir(root) if d.startswith("batch="))
     assert parts == ["batch=1", "batch=2"]  # folded base + carried newest
@@ -149,6 +147,10 @@ def test_compaction_preserves_model_and_replay_contract(spark, tmp_path):
     grown = _model_rows(current_nb_model(spark, stats_dir))
     assert compact_nb_shards(spark, stats_dir) == 2
     assert _model_rows(current_nb_model(spark, stats_dir)) == grown
+    # the superseded generation is GC'd whole, not left as an empty dir
+    assert [d for d in os.listdir(stats_dir) if d.startswith("gen=")] == [
+        "gen=2"
+    ]
 
 
 def test_compaction_noop_below_two_shards(spark, tmp_path):
