@@ -36,7 +36,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from purldb_spark.operators.perceptron import bucket_expr_spark
+from purldb_spark.functions.text import bucket_expr_spark
 
 
 def nb_train(

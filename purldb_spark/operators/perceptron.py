@@ -1,7 +1,7 @@
 """Batch perceptron trainer — the fourth in-engine trainer family
 (after kmeans, PQ, BPE): a linear text classifier TRAINED distributedly,
 closing the gap the frozen hashed-weight model documents
-(plans/q_select.py: "no trained classifier ships in the sandbox" — with
+(functions/text.py: "no trained classifier ships in the sandbox" — with
 integer-exact updates one can be trained IN the engine and verified
 against a DuckDB replay).
 
@@ -28,23 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def bucket_expr_spark(w: str, n_buckets: int) -> str:
-    """md5-hash bucket of one token (the _QC convention: first 8 md5 hex
-    chars as an integer, mod n_buckets)."""
-    return (
-        f"pmod(cast(conv(substring(md5({w}), 1, 8), 16, 10) as bigint),"
-        f" {n_buckets})"
-    )
-
-
-def bucket_expr_sql(w: str, n_buckets: int) -> str:
-    """DuckDB twin of bucket_expr_spark (UBIGINT % n == conv mod n for
-    32-bit inputs)."""
-    return (
-        f"CAST(CAST(concat('0x', substring(md5({w}), 1, 8)) AS UBIGINT)"
-        f" % {n_buckets} AS BIGINT)"
-    )
+from purldb_spark.functions.text import bucket_expr_spark
 
 
 def features(
@@ -139,9 +123,10 @@ def score_expr(text_col: str, weights: list[int], n_buckets: int) -> str:
     """Spark SQL expression scoring one document under TRAINED weights
     (w0..w{n-1} + bias, classifier_train's artifact): the map-only gate
     a curation pipeline fuses into its corpus scan — the trained twin of
-    the frozen _QC gate in plans/q_select.py. One aggregate over the
-    token array; weight lookup is a literal element_at, so the model
-    rides into codegen exactly like the frozen one."""
+    the frozen teacher (functions/text.py teacher_score_spark). One
+    aggregate over the token array; weight lookup is a literal
+    element_at, so the model rides into codegen exactly like the frozen
+    one."""
     b = bucket_expr_spark("w", n_buckets)
     warr = ", ".join(f"{int(w)}L" for w in weights[:n_buckets])
     bias = int(weights[n_buckets])

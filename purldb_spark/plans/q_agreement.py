@@ -3,7 +3,8 @@ closes the trainer story (r14 verdict #5): score every document under
 the THREE quality gates the engine ships —
 
   frozen     — the hashed-weight linear teacher
-               (plans/q_select.py select_quality_classifier's _QC gate)
+               (functions/text.py teacher_keep_spark, the gate of
+               select_quality_classifier)
   perceptron — the trained 4-epoch batch-perceptron student
                (plans/q_classifier.py artifact, final-epoch weights)
   nb         — the trained multinomial-NB student (operators/nb.py), on
@@ -39,15 +40,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import bucket_expr_sql, teacher_keep_spark
 from purldb_spark.operators.nb import (
     loglik_e6_sql,
     nb_argmax_e6_expr,
     prior_e6_sql,
 )
-from purldb_spark.operators.perceptron import (
-    bucket_expr_sql,
-    score_expr,
-)
+from purldb_spark.operators.perceptron import score_expr
 from purldb_spark.plans.q_classifier import (
     _B,
     _EPOCHS,
@@ -55,7 +54,6 @@ from purldb_spark.plans.q_classifier import (
     perceptron_history,
 )
 from purldb_spark.plans.q_nb import trained_nb_stats
-from purldb_spark.plans.q_select import _QC_W_SPARK
 from purldb_spark.plans.registry import query
 
 
@@ -140,10 +138,7 @@ def classifier_agreement_eval(
     corpus under all three gates in ONE pass and report the pairwise
     agreement table (module docstring)."""
     docs = load(spark, sf_dir, "documents")
-    y = F.expr(
-        f"case when aggregate(split(text, ' '), 0L,"
-        f" (acc, w) -> acc + ({_QC_W_SPARK})) >= 0 then 1 else -1 end"
-    ).cast("long")
+    y = F.expr(f"case when {teacher_keep_spark()} then 1 else -1 end").cast("long")
 
     # both students come from the session model caches — the
     # trained_centroids production split (training pipeline fits once,

@@ -43,15 +43,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from purldb_spark.functions.text import SHINGLES_SQL
 from purldb_spark.operators.dedup import connected_components
 from purldb_spark.plans.fixture_cache import cached_fixture, near_dup_pairs
-from purldb_spark.plans.q_dedup import _SHINGLES_SQL
 from purldb_spark.plans.registry import query
 
 _CAPS = [1, 2, 4]
 
 _ORACLE = f"""
-WITH RECURSIVE shingles AS MATERIALIZED ({_SHINGLES_SQL}),
+WITH RECURSIVE shingles AS MATERIALIZED ({SHINGLES_SQL}),
 sizes0 AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
 allpairs AS MATERIALIZED (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection

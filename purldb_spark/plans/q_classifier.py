@@ -32,12 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
-from purldb_spark.operators.perceptron import (
-    bucket_expr_sql,
+from purldb_spark.functions.text import (
     bucket_expr_spark,
-    perceptron_fit,
+    bucket_expr_sql,
+    teacher_keep_spark,
+    teacher_keep_sql,
 )
-from purldb_spark.plans.q_select import _QC_W_SPARK, _QC_W_SQL
+from purldb_spark.operators.perceptron import perceptron_fit
 from purldb_spark.plans.registry import query
 
 _B = 8  # feature buckets (student model; the frozen teacher uses 4096)
@@ -62,9 +63,7 @@ feats AS MATERIALIZED (
   SELECT doc_id,
          {feat_cols},
          CAST(1 AS BIGINT) AS xb,
-         CASE WHEN CAST(list_sum(list_transform(string_split(text, ' '),
-                     w -> {_QC_W_SQL})) AS BIGINT) >= 0
-              THEN 1 ELSE -1 END AS y
+         CASE WHEN {teacher_keep_sql()} THEN 1 ELSE -1 END AS y
   FROM documents
 )"""
     ]
@@ -132,11 +131,7 @@ def perceptron_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in range(_B)
             ],
             F.lit(1).cast("long").alias("xb"),
-            F.expr(
-                f"case when aggregate(split(text, ' '), 0L,"
-                f" (acc, w) -> acc + ({_QC_W_SPARK})) >= 0 then 1 else -1"
-                f" end"
-            )
+            F.expr(f"case when {teacher_keep_spark()} then 1 else -1 end")
             .cast("long")
             .alias("y"),
         ).localCheckpoint(eager=True)

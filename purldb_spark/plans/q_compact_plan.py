@@ -20,8 +20,8 @@ operation):
     the verify-join side, always the dominant bill.
 
 Cross-engine exactness: counts/sums are BIGINTs over identical strings
-(both engines split text on single spaces — the q_dedup shingle
-convention); the only division is floor(retained * 1e6 / N) whose
+(both engines split text on single spaces — the functions/text.py
+shingle convention); the only division is floor(retained * 1e6 / N) whose
 operands are < 2^53, so IEEE double floor agrees. The corpus count and
 min doc_id enter as driver scalars (the memoized corpus_count pattern);
 the DuckDB oracle derives the same cutoffs relationally.
@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import SHINGLES_SQL
 from purldb_spark.operators.dedup import word_shingles
 from purldb_spark.plans.registry import query
 
@@ -53,14 +54,6 @@ _POLICIES = [
 ]
 _N_BANDS = 4
 _BAND_ROW_BYTES = 80  # 8 (doc_id) + 8 (band_idx) + 64 (band_key hex)
-
-# the q_dedup shingle convention, restated locally so this dashboard's
-# hash closure stays off the fixture-cache module graph
-_SHINGLES_SQL = """
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       unnest(generate_series(1, len(w) - 2)) AS t(i)
-"""
 
 _ORACLE = f"""
 WITH params AS (SELECT min(doc_id) AS mn, count(*) AS n FROM documents),
@@ -75,7 +68,7 @@ cut AS (
          n
   FROM pol, params
 ),
-shingles AS ({_SHINGLES_SQL}),
+shingles AS ({SHINGLES_SQL}),
 docs_r AS (
   SELECT c.policy, count(*) AS retained_docs
   FROM cut c JOIN documents d ON d.doc_id >= c.cutoff_id

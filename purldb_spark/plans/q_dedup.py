@@ -18,10 +18,15 @@ text analysis in q_text.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import (
+    SHINGLES_SQL,
+    WINNOW_SQL,
+    winnow_fingerprints,
+)
 from purldb_spark.operators.dedup import (
     df_capped_candidate_pairs,
     exact_dedup,
@@ -67,12 +72,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(load(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-_SHINGLES_SQL = """
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       unnest(generate_series(1, len(w) - 2)) AS t(i)
-"""
-
 _N_HASHES, _BAND_SIZE = 8, 2
 _MINHASH_AGGS_SQL = ", ".join(
     f"min(md5('{s}|' || sh)) AS h{s}" for s in range(_N_HASHES)
@@ -86,7 +85,7 @@ _BANDS_SQL = " UNION ALL ".join(
 @query(
     "dedup_minhash_lsh",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
+    WITH shingles AS ({SHINGLES_SQL}),
     sig AS (SELECT doc_id, {_MINHASH_AGGS_SQL} FROM shingles GROUP BY doc_id),
     bands AS ({_BANDS_SQL}),
     cands AS (
@@ -140,7 +139,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_incremental",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
+    WITH shingles AS ({SHINGLES_SQL}),
     sig AS (SELECT doc_id, {_MINHASH_AGGS_SQL} FROM shingles GROUP BY doc_id),
     bands AS ({_BANDS_SQL}),
     cands AS (
@@ -213,7 +212,7 @@ _MIN_SUPPORT = 2
 @query(
     "dedup_ngram_jaccard_capped",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
+    WITH shingles AS ({SHINGLES_SQL}),
     rare AS (SELECT sh FROM shingles GROUP BY sh HAVING count(*) <= {_DF_CAP}),
     cands AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -273,7 +272,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # has a ~30-word vocabulary, so token SETS are nearly identical across
 # documents and token-level simhash degenerates (every pair within hamming 3).
 # Shingles are high-cardinality and shared only by near-duplicates.
-_TOKENS_SQL = _SHINGLES_SQL.replace("AS sh", "AS tok")
+_TOKENS_SQL = SHINGLES_SQL.replace("AS sh", "AS tok")
 
 
 @query(
@@ -323,7 +322,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide_near_pairs(sim, "doc_id", max_hamming=3)
 
 
-_W = 4  # winnowing window (fingerprints per ~w tokens)
 _SUB_CAP = 16  # fingerprint document-frequency cap
 _SUB_MIN = 4  # shared fingerprints to call it substring overlap
 
@@ -331,20 +329,7 @@ _SUB_MIN = 4  # shared fingerprints to call it substring overlap
 @query(
     "dedup_substring_winnow",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, i AS pos,
-             md5(array_to_string(list_slice(w, i, i + 4), ' ')) AS g
-      FROM toks, unnest(generate_series(1, len(w) - 4)) AS t(i)
-    ),
-    winnowed AS (
-      SELECT DISTINCT doc_id,
-             min(g) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND {_W - 1} FOLLOWING) AS fp
-      FROM grams
-    ),
+    WITH winnowed AS (SELECT DISTINCT doc_id, fp FROM ({WINNOW_SQL})),
     rare AS (
       SELECT fp FROM winnowed GROUP BY fp HAVING count(*) <= {_SUB_CAP}
     ),
@@ -369,25 +354,8 @@ def dedup_substring_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     same substring-match guarantee; the document-frequency cap bounds the
     self-join fan-out exactly like df_capped_candidate_pairs. All
     equi-joins, one shuffle on fp, map-side partial counts."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= 5)
-    )
-    # r15: position-explode + per-row md5 (codegen) instead of the
-    # interpreted transform(...) array build; pos stays 0-based
-    grams = d.select(
-        "doc_id",
-        F.expr("explode(sequence(1, size(w) - 4))").alias("i"),
-        "w",
-    ).select(
-        "doc_id",
-        F.expr("i - 1").alias("pos"),
-        F.expr("md5(concat_ws(' ', slice(w, i, 5)))").alias("g"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _W - 1)
     winnowed = (
-        grams.withColumn("fp", F.min("g").over(win))
+        winnow_fingerprints(load(spark, sf_dir, "documents"))
         .select("doc_id", "fp")
         .dropDuplicates()
     )
@@ -420,7 +388,7 @@ def dedup_substring_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "decontam_ngram_overlap",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
+    WITH shingles AS ({SHINGLES_SQL}),
     bench AS (SELECT DISTINCT sh FROM shingles WHERE doc_id % 37 = 0),
     corpus AS (SELECT * FROM shingles WHERE doc_id % 37 <> 0),
     sizes AS (SELECT doc_id, count(*) AS n_shingles FROM corpus GROUP BY 1),
@@ -452,7 +420,7 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_cluster_cc",
     oracle=f"""
-    WITH RECURSIVE shingles AS ({_SHINGLES_SQL}),
+    WITH RECURSIVE shingles AS ({SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection
@@ -506,7 +474,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_recall_eval",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
+    WITH shingles AS ({SHINGLES_SQL}),
     sig AS (SELECT doc_id, {_MINHASH_AGGS_SQL} FROM shingles GROUP BY doc_id),
     bands AS ({_BANDS_SQL}),
     cands AS (

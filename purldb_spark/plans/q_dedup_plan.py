@@ -23,8 +23,8 @@ gate):
 Everything is an exact BIGINT count off one groupBy per method — the
 dashboards' cost is a handful of key-count aggregations, linear in index
 size; no candidate pair is materialized. Oracles re-derive every index
-relationally from raw documents (the q_dedup shingle/signature SQL), so
-the shared fixtures can never mask a counting bug.
+relationally from raw documents (the shared shingle twin and the q_dedup
+signature SQL), so the shared fixtures can never mask a counting bug.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import SHINGLES_SQL
 from purldb_spark.operators.simhash_wide import band_exprs, simhash_wide_sql
 from purldb_spark.plans.fixture_cache import (
     doc_shingles,
@@ -43,7 +44,6 @@ from purldb_spark.plans.q_dedup import (
     _BANDS_SQL,
     _DF_CAP,
     _MINHASH_AGGS_SQL,
-    _SHINGLES_SQL,
     _TOKENS_SQL,
 )
 from purldb_spark.plans.registry import query
@@ -74,7 +74,7 @@ _SIMHASH_BANDS_SQL = f"""
 @query(
     "dedup_cost_plan",
     oracle=f"""
-    WITH shingles AS MATERIALIZED ({_SHINGLES_SQL}),
+    WITH shingles AS MATERIALIZED ({SHINGLES_SQL}),
     sig AS MATERIALIZED (
       SELECT doc_id, {_MINHASH_AGGS_SQL} FROM shingles GROUP BY doc_id
     ),

@@ -24,15 +24,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from purldb_spark.catalog.tables import load
-from purldb_spark.functions.text import quality_features, quality_sql
-from purldb_spark.plans.q_dedup import _SHINGLES_SQL
+from purldb_spark.functions.text import (
+    quality_features,
+    quality_sql,
+    SHINGLES_SQL,
+)
 from purldb_spark.plans.registry import query
 
 
 @query(
     "dedup_cluster_keep_best",
     oracle=f"""
-    WITH RECURSIVE shingles AS ({_SHINGLES_SQL}),
+    WITH RECURSIVE shingles AS ({SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection

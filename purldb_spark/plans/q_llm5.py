@@ -4,7 +4,7 @@ pack assignments out, in one declarative plan.
     dedup decision (near-dup clusters -> keep best)          [q_llm3]
       -> quality gate (score >= 0.2)                         [functions/text]
       -> repetition gate (Gopher top-word/dup-bigram)        [q_llm2]
-      -> classifier gate (hashed linear model, score >= 0)   [q_select]
+      -> classifier gate (frozen teacher, score >= 0)        [functions/text]
       -> perplexity gate (drop the CCNet 'tail' tercile)     [q_select]
       -> deterministic stratified sample (per-source rates)  [assemble]
       -> sequence packing into 4096-token bins               [assemble]
@@ -27,13 +27,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
-from purldb_spark.functions.text import n_tokens_ws, quality_sql
+from purldb_spark.functions.text import (
+    n_tokens_ws,
+    quality_sql,
+    SHINGLES_SQL,
+    teacher_keep_spark,
+    teacher_keep_sql,
+)
 from purldb_spark.operators.assemble import pack_greedy, stratified_sample
-from purldb_spark.plans.q_dedup import _SHINGLES_SQL
 from purldb_spark.plans.q_llm2 import text_repetition
 from purldb_spark.plans.q_llm3 import dedup_cluster_keep_best
 from purldb_spark.plans.q_llm4 import _DEFAULT_RATE, _H_SQL, _RATES, _THRESH_SQL
-from purldb_spark.plans.q_select import _QC_W_SQL, _QC_W_SPARK, select_perplexity_buckets
+from purldb_spark.plans.q_select import select_perplexity_buckets
 from purldb_spark.plans.registry import query
 
 _QUALITY_FLOOR = 0.2
@@ -43,7 +48,7 @@ _PACK_BUDGET = 4096
 @query(
     "corpus_curate_pipeline",
     oracle=f"""
-    WITH RECURSIVE shingles AS ({_SHINGLES_SQL}),
+    WITH RECURSIVE shingles AS ({SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection
@@ -109,9 +114,7 @@ _PACK_BUDGET = 4096
               <= 0.3
     ),
     qc AS (
-      SELECT doc_id FROM documents
-      WHERE CAST(list_sum(list_transform(string_split(text, ' '),
-                                         w -> {_QC_W_SQL})) AS BIGINT) >= 0
+      SELECT doc_id FROM documents WHERE {teacher_keep_sql()}
     ),
     pgrams AS (
       SELECT doc_id, lang, substr(text, i, 3) AS g
@@ -205,11 +208,7 @@ def corpus_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     base = (
-        docs.filter(
-            F.expr(
-                f"aggregate(split(text, ' '), 0L, (acc, w) -> acc + ({_QC_W_SPARK})) >= 0"
-            )
-        )
+        docs.filter(F.expr(teacher_keep_spark()))
         .select("doc_id", "source", n_tokens_ws("text").alias("n_tokens"))
         .join(kept, "doc_id")
         .join(nonrep, "doc_id")

@@ -29,6 +29,7 @@ from purldb_spark.functions.fingerprints import (
     hamming128_sql,
 )
 from purldb_spark.functions.halohash import bah128_fingerprint_sql
+from purldb_spark.functions.text import SHINGLES_SQL
 from purldb_spark.operators.matching import (
     banded_candidates,
     cascade,
@@ -314,17 +315,10 @@ def f5_rank_tiebreak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLES_SQL = """
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       unnest(generate_series(1, len(w) - 2)) AS t(i)
-"""
-
-
 @query(
     "a5_snippet_jaccard",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
+    WITH shingles AS ({SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection
@@ -412,7 +406,7 @@ def a5_snippet_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT q_doc_id FROM rem1
       WHERE q_doc_id NOT IN (SELECT q_doc_id FROM approx)
     ),
-    shingles AS ({_SHINGLES_SQL}),
+    shingles AS ({SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
     content AS (
       SELECT s.q_doc_id, s.index_doc_id, -1 AS hamming FROM (

@@ -27,34 +27,52 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import (
+    bucket_expr_spark,
+    bucket_expr_sql,
+    teacher_keep_spark,
+    teacher_keep_sql,
+)
 from purldb_spark.operators.nb import nb_train
-from purldb_spark.operators.perceptron import bucket_expr_sql
-from purldb_spark.plans.q_select import _QC_W_SPARK, _QC_W_SQL
 from purldb_spark.plans.registry import query
 
 _B = 8  # student buckets (the frozen teacher uses 4096)
 
 
-def _oracle() -> str:
-    return f"""
-WITH docs2 AS MATERIALIZED (
-  SELECT doc_id, text,
-         CASE WHEN CAST(list_sum(list_transform(string_split(text, ' '),
-                     w -> {_QC_W_SQL})) AS BIGINT) >= 0
-              THEN 1 ELSE 0 END AS label
+def teacher_labeled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents + the frozen teacher's keep/drop decision as an int
+    label — the training frame both NB faces and the agreement eval
+    share."""
+    return load(spark, sf_dir, "documents").select(
+        "doc_id",
+        "text",
+        F.expr(f"case when {teacher_keep_spark()} then 1 else 0 end").alias("y"),
+    )
+
+
+# DuckDB twin of teacher_labeled_docs (the int label is named `label`)
+TEACHER_LABELED_SQL = f"""
+  SELECT doc_id, text, CASE WHEN {teacher_keep_sql()} THEN 1 ELSE 0 END AS label
   FROM documents
-),
+"""
+
+
+def nb_train_oracle(n_buckets: int) -> str:
+    """DuckDB replay of nb_train over the teacher-labeled documents at
+    width n_buckets: the same split/md5-bucket/count chain on a dense
+    range()-generated grid, every count BIGINT."""
+    return f"""
+WITH docs2 AS MATERIALIZED ({TEACHER_LABELED_SQL}),
 toks AS MATERIALIZED (
-  SELECT label, {bucket_expr_sql("w", _B)} AS bucket
+  SELECT label, {bucket_expr_sql("w", n_buckets)} AS bucket
   FROM (SELECT label, unnest(string_split(text, ' ')) AS w FROM docs2)
 ),
 cnt AS (SELECT label, bucket, count(*) AS token_cnt FROM toks GROUP BY 1, 2),
 cd AS (SELECT label, count(*) AS class_docs FROM docs2 GROUP BY 1),
 ct AS (SELECT label, count(*) AS class_tokens FROM toks GROUP BY 1),
 grid AS (
-  SELECT c.label, b.bucket
-  FROM (VALUES (0), (1)) c(label),
-       (VALUES {", ".join(f"({i})" for i in range(_B))}) b(bucket)
+  SELECT c.range AS label, b.range AS bucket
+  FROM range(2) c, range({n_buckets}) b
 )
 SELECT CAST(g.label AS BIGINT) AS label,
        CAST(g.bucket AS BIGINT) AS bucket,
@@ -66,20 +84,6 @@ LEFT JOIN cnt ON cnt.label = g.label AND cnt.bucket = g.bucket
 LEFT JOIN cd ON cd.label = g.label
 LEFT JOIN ct ON ct.label = g.label
 """
-
-
-def teacher_labeled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + the frozen teacher's keep/drop decision as an int
-    label — the training frame both NB faces and the agreement eval
-    share."""
-    return load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.expr(
-            f"case when aggregate(split(text, ' '), 0L,"
-            f" (acc, w) -> acc + ({_QC_W_SPARK})) >= 0 then 1 else 0 end"
-        ).alias("y"),
-    )
 
 
 def trained_nb_stats(
@@ -107,7 +111,7 @@ def trained_nb_stats(
     )
 
 
-@query("nb_train", oracle=_oracle())
+@query("nb_train", oracle=nb_train_oracle(_B))
 def nb_train_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the NB student on the frozen teacher's decisions (module
     docstring); emit the dense sufficient-statistics table."""
@@ -119,13 +123,7 @@ def nb_train_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "nb_merge_shards",
     oracle=f"""
-WITH docs2 AS MATERIALIZED (
-  SELECT doc_id, text,
-         CASE WHEN CAST(list_sum(list_transform(string_split(text, ' '),
-                     w -> {_QC_W_SQL})) AS BIGINT) >= 0
-              THEN 1 ELSE 0 END AS label
-  FROM documents
-),
+WITH docs2 AS MATERIALIZED ({TEACHER_LABELED_SQL}),
 toks AS MATERIALIZED (
   SELECT doc_id % 4 AS shard, label, {bucket_expr_sql("w", _B)} AS bucket
   FROM (SELECT doc_id, label, unnest(string_split(text, ' ')) AS w
@@ -165,16 +163,7 @@ def nb_merge_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches prove engine-checked (sketch_hll_merge_daily), extended to
     the trainer family. merge_exact is TRUE for every row by the monoid
     algebra; the oracle re-derives both sides relationally."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.expr(
-            f"case when aggregate(split(text, ' '), 0L,"
-            f" (acc, w) -> acc + ({_QC_W_SPARK})) >= 0 then 1 else 0 end"
-        ).alias("y"),
-    )
-    from purldb_spark.operators.perceptron import bucket_expr_spark
-
+    docs = teacher_labeled_docs(spark, sf_dir)
     b = bucket_expr_spark("w", _B)
     toks = docs.select(
         (F.col("doc_id") % 4).alias("shard"),

@@ -13,60 +13,25 @@ corpus scan. The artifact grows from 2 x 8 to 2 x 4096 integer rows
 grid is generated by a single executor-side range decode
 (operators/nb.py), not a driver list.
 
-The oracle replays the identical split/md5-bucket/count chain in DuckDB
-with a range()-generated grid — at 8192 output rows a VALUES literal
-would be silly; everything stays BIGINT so the hash match is bit-exact.
+The oracle is nb_train's own DuckDB replay (q_nb.nb_train_oracle) at
+this width; its grid is range()-generated and every count stays BIGINT,
+so the hash match is bit-exact.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from purldb_spark.functions.text import TEACHER_BUCKETS
 from purldb_spark.operators.nb import nb_train
-from purldb_spark.operators.perceptron import bucket_expr_sql
-from purldb_spark.plans.q_select import _QC_W_SQL
+from purldb_spark.plans.q_nb import nb_train_oracle, teacher_labeled_docs
 from purldb_spark.plans.registry import query
 
-_B_WIDE = 4096  # the frozen teacher's own width
 
-
-_ORACLE = f"""
-WITH docs2 AS MATERIALIZED (
-  SELECT doc_id, text,
-         CASE WHEN CAST(list_sum(list_transform(string_split(text, ' '),
-                     w -> {_QC_W_SQL})) AS BIGINT) >= 0
-              THEN 1 ELSE 0 END AS label
-  FROM documents
-),
-toks AS MATERIALIZED (
-  SELECT label, {bucket_expr_sql("w", _B_WIDE)} AS bucket
-  FROM (SELECT label, unnest(string_split(text, ' ')) AS w FROM docs2)
-),
-cnt AS (SELECT label, bucket, count(*) AS token_cnt FROM toks GROUP BY 1, 2),
-cd AS (SELECT label, count(*) AS class_docs FROM docs2 GROUP BY 1),
-ct AS (SELECT label, count(*) AS class_tokens FROM toks GROUP BY 1),
-grid AS (
-  SELECT c.range AS label, b.range AS bucket
-  FROM range(2) c, range({_B_WIDE}) b
-)
-SELECT CAST(g.label AS BIGINT) AS label,
-       CAST(g.bucket AS BIGINT) AS bucket,
-       CAST(COALESCE(cnt.token_cnt, 0) AS BIGINT) AS token_cnt,
-       CAST(COALESCE(cd.class_docs, 0) AS BIGINT) AS class_docs,
-       CAST(COALESCE(ct.class_tokens, 0) AS BIGINT) AS class_tokens
-FROM grid g
-LEFT JOIN cnt ON cnt.label = g.label AND cnt.bucket = g.bucket
-LEFT JOIN cd ON cd.label = g.label
-LEFT JOIN ct ON ct.label = g.label
-"""
-
-
-@query("nb_train_wide", oracle=_ORACLE)
+@query("nb_train_wide", oracle=nb_train_oracle(TEACHER_BUCKETS))
 def nb_train_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the NB student at the teacher's own width (module
     docstring); emit the dense 2 x 4096 sufficient-statistics table."""
-    from purldb_spark.plans.q_nb import teacher_labeled_docs
-
     return nb_train(
-        spark, teacher_labeled_docs(spark, sf_dir), "y", "text", _B_WIDE
+        spark, teacher_labeled_docs(spark, sf_dir), "y", "text", TEACHER_BUCKETS
     )

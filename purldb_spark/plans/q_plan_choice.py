@@ -52,8 +52,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import SHINGLES_SQL
 from purldb_spark.plans.fixture_cache import doc_shingles
-from purldb_spark.plans.q_dedup import _DF_CAP, _SHINGLES_SQL
+from purldb_spark.plans.q_dedup import _DF_CAP
 from purldb_spark.plans.registry import query
 
 _T_NUM, _T_DEN = 4, 5  # t = 0.8: prefix length n - ceil(t*n) + 1
@@ -158,7 +159,7 @@ def dedup_plan_stats(sliced: DataFrame, df_cap: int = _DF_CAP) -> DataFrame:
     )
 
 
-_STATS_CTES = f"""shingles AS MATERIALIZED ({_SHINGLES_SQL}),
+_STATS_CTES = f"""shingles AS MATERIALIZED ({SHINGLES_SQL}),
 sliced AS MATERIALIZED (
   SELECT d.lang AS slice, s.doc_id, s.sh
   FROM shingles s JOIN documents d ON d.doc_id = s.doc_id

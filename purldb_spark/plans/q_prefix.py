@@ -39,12 +39,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from purldb_spark.functions.text import SHINGLES_SQL
 from purldb_spark.plans.fixture_cache import doc_shingles
-from purldb_spark.plans.q_dedup import _SHINGLES_SQL
 from purldb_spark.plans.registry import query
 
 _ORACLE = f"""
-WITH shingles AS MATERIALIZED ({_SHINGLES_SQL}),
+WITH shingles AS MATERIALIZED ({SHINGLES_SQL}),
 df AS MATERIALIZED (SELECT sh, count(*) AS df FROM shingles GROUP BY sh),
 sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
 ranked AS MATERIALIZED (

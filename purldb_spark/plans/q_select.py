@@ -26,6 +26,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import (
+    bucket_expr_spark,
+    bucket_expr_sql,
+    SHINGLES_SQL,
+    span_scrub,
+    span_scrub_sql,
+    stopwords_spark,
+    stopwords_sql,
+    teacher_score_spark,
+    teacher_score_sql,
+    word_grams,
+    word_grams_sql,
+)
 from purldb_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -42,16 +55,6 @@ _SEED = "dsir"    # shared md5 seed for the Gumbel uniforms
 # ratio carries real signal); raw = the whole pool
 _TARGET_PRED_SPARK = "lang = 'en'"
 _TARGET_PRED_SQL = _TARGET_PRED_SPARK
-
-# md5-derived unigram bucket in [0, 1024): the cross-engine hash convention
-# of operators/assemble.py (first 8 md5 hex chars as an integer)
-_BUCKET_SPARK = (
-    "pmod(cast(conv(substring(md5({w}), 1, 8), 16, 10) as bigint), 1024)"
-)
-_BUCKET_SQL = (
-    "CAST(CAST(concat('0x', substring(md5({w}), 1, 8)) AS UBIGINT)"
-    " % 1024 AS BIGINT)"
-)
 
 # Gumbel noise from the shared uniform-hash convention; u is offset by 0.5
 # so it can never hit 0 or 1 (both logs stay finite)
@@ -78,7 +81,7 @@ _GUMBEL_SQL = (
       FROM documents, LATERAL unnest(string_split(text, ' ')) u(wd)
     ),
     bucketed AS (
-      SELECT doc_id, is_t, {_BUCKET_SQL.format(w="wd")} AS b FROM toks
+      SELECT doc_id, is_t, {bucket_expr_sql("wd", _B)} AS b FROM toks
     ),
     counts AS (
       SELECT r.b,
@@ -139,7 +142,7 @@ def select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split("text", " ")).alias("wd"),
         )
         .select(
-            "is_t", F.expr(_BUCKET_SPARK.format(w="wd")).alias("b")
+            "is_t", F.expr(bucket_expr_spark("wd", _B)).alias("b")
         )
         .groupBy("b")
         .agg(
@@ -165,7 +168,7 @@ def select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(_B)
     ]
     lr_lit = "array(" + ", ".join(f"{v}L" for v in lr) + ")"
-    bucket_wd = _BUCKET_SPARK.format(w="wd")
+    bucket_wd = bucket_expr_spark("wd", _B)
     scored = d.select(
         "doc_id",
         F.expr(
@@ -189,40 +192,21 @@ _SN = 10  # duplicated-span width (word tokens)
 
 @query(
     "text_repeated_span_scrub",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, t.i AS i,
-             array_to_string(w[i:i + {_SN - 1}], ' ') AS g,
-             doc_id * 1000000 + t.i AS occ_key
-      FROM toks, LATERAL unnest(generate_series(1, len(w) - {_SN - 1})) t(i)
-      WHERE len(w) >= {_SN}
+    oracle=span_scrub_sql(
+        f"""
+    WITH grams AS (
+      SELECT doc_id, i0, g, doc_id * 1000000 + i0 + 1 AS occ_key
+      FROM ({word_grams_sql(_SN)})
     ),
     dup AS (
       SELECT g, MIN(occ_key) AS keeper
       FROM grams GROUP BY g HAVING COUNT(*) >= 2
-    ),
-    covered AS (
-      SELECT DISTINCT gr.doc_id, CAST(gr.i - 1 + o.j AS BIGINT) AS pos
-      FROM grams gr JOIN dup d ON d.g = gr.g AND gr.occ_key <> d.keeper,
-           LATERAL unnest(generate_series(0, {_SN - 1})) o(j)
-    ),
-    cov_per_doc AS (
-      SELECT doc_id, list(pos) AS cov FROM covered GROUP BY doc_id
     )
-    SELECT t.doc_id,
-           CAST(len(t.w) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(len(c.cov), 0) AS BIGINT) AS n_removed,
-           COALESCE(array_to_string(
-             list_transform(
-               list_filter(generate_series(0, len(t.w) - 1),
-                           p -> NOT list_contains(COALESCE(c.cov, []), p)),
-               p -> t.w[CAST(p AS INT) + 1]),
-             ' '), '') AS scrubbed
-    FROM toks t LEFT JOIN cov_per_doc c ON c.doc_id = t.doc_id
+    SELECT gr.doc_id, gr.i0
+    FROM grams gr JOIN dup d ON d.g = gr.g AND gr.occ_key <> d.keeper
     """,
+        _SN,
+    ),
 )
 def text_repeated_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr dedup (Lee et al. 2021) on word {_SN}-grams: any token
@@ -244,32 +228,9 @@ def text_repeated_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     length; fixed-width grams + position-set union reconstructs the same
     removal set for spans >= {_SN} tokens, the regime the paper targets
     (its threshold is 50 BPE tokens)."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("w"))
-    )
-    grams = (
-        d.filter(F.size("w") >= _SN)
-        .select(
-            "doc_id",
-            F.expr(f"explode(sequence(1, size(w) - {_SN - 1}))").alias(
-                "i1"
-            ),
-            "w",
-        )
-        # r15: position-explode + per-row slice (codegen) instead of the
-        # interpreted transform(...) array build; i0 stays 0-based
-        .select(
-            "doc_id",
-            F.expr("i1 - 1").alias("i0"),
-            F.expr(f"concat_ws(' ', slice(w, i1, {_SN}))").alias("g"),
-        )
-        .select(
-            "doc_id",
-            (F.col("i0") + 1).alias("i"),
-            "g",
-            (F.col("doc_id") * 1000000 + F.col("i0") + 1).alias("occ_key"),
-        )
+    docs = load(spark, sf_dir, "documents")
+    grams = word_grams(docs, _SN).withColumn(
+        "occ_key", F.col("doc_id") * 1000000 + F.col("i0") + 1
     )
     dup = (
         grams.groupBy("g")
@@ -277,37 +238,8 @@ def text_repeated_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cnt") >= 2)
         .select("g", "keeper")
     )
-    covered = (
-        grams.join(dup, "g")
-        .filter(F.col("occ_key") != F.col("keeper"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"sequence(cast(i - 1 as bigint),"
-                    f" cast(i - 1 as bigint) + {_SN - 1})"
-                )
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-    cov_per_doc = covered.groupBy("doc_id").agg(
-        F.collect_list("pos").alias("cov")
-    )
-    return (
-        d.join(cov_per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("w").cast("long").alias("n_tokens"),
-            F.coalesce(F.size("cov"), F.lit(0)).cast("long").alias("n_removed"),
-            F.expr(
-                "array_join(transform(array_except("
-                "sequence(0L, cast(size(w) as bigint) - 1),"
-                " coalesce(cov, cast(array() as array<bigint>))),"
-                " p -> element_at(w, cast(p as int) + 1)), ' ')"
-            ).alias("scrubbed"),
-        )
-    )
+    occ = grams.join(dup, "g").filter(F.col("occ_key") != F.col("keeper"))
+    return span_scrub(docs, occ, _SN)
 
 
 # ---------------------------------------------------------------------------
@@ -317,12 +249,6 @@ def text_repeated_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DF_CAP_TFIDF = 64   # inverted-index document-frequency cap (scale bound)
 _COS_FLOOR = 0.3     # similarity floor
 _TOPN = 5            # neighbors per document
-
-_TFIDF_SHINGLES_SQL = """
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       unnest(generate_series(1, len(w) - 2)) AS t(i)
-"""
 
 
 def _tfidf_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -360,7 +286,7 @@ def _tfidf_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_tfidf_neighbors",
     oracle=f"""
-    WITH shingles AS ({_TFIDF_SHINGLES_SQL}),
+    WITH shingles AS ({SHINGLES_SQL}),
     n AS (SELECT COUNT(*) AS n_docs FROM documents),
     idf AS (
       SELECT sh,
@@ -471,11 +397,6 @@ def text_tfidf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # add-one-smoothed char-trigram logprob on the 1e-6 integer grid (the
 # select_dsir determinism contract: ln from the same libm on both engines,
 # floor can flip only within 1 ulp of a grid boundary)
-_TRIGRAMS_SPARK = (
-    "transform(sequence(1, length(text) - 2), i -> substring(text, i, 3))"
-)
-
-
 _PPL_DENOM: dict[tuple[str, str], int] = {}
 
 
@@ -637,34 +558,13 @@ def select_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # select_quality_classifier
 # ---------------------------------------------------------------------------
 
-_QC_B = 4096  # hashed-token feature buckets
-# frozen model weight for one token: bucket = md5(token) mod 4096, then
-# weight(bucket) = md5('qw|' || bucket) mod 2001 - 1000, an integer in
-# [-1000, 1000] on the exact grid. The weights are a deterministic
-# stand-in for a trained fastText/logistic model (same frozen-artifact
-# policy as operators/pq_codebooks.json — no trained classifier ships in
-# the sandbox); the Spark shape is what the real model would run.
-_QC_W_SPARK = (
-    "pmod(cast(conv(substring(md5(concat('qw|', cast("
-    "pmod(cast(conv(substring(md5(w), 1, 8), 16, 10) as bigint), 4096)"
-    " as string))), 1, 8), 16, 10) as bigint), 2001) - 1000"
-)
-_QC_W_SQL = (
-    "CAST(CAST(concat('0x', substring(md5(concat('qw|', CAST("
-    "CAST(CAST(concat('0x', substring(md5(w), 1, 8)) AS UBIGINT)"
-    " % 4096 AS BIGINT) AS VARCHAR))), 1, 8)) AS UBIGINT)"
-    " % 2001 AS BIGINT) - 1000"
-)
-
-
 @query(
     "select_quality_classifier",
     oracle=f"""
     WITH scored AS (
       SELECT doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(list_sum(list_transform(string_split(text, ' '),
-                                          w -> {_QC_W_SQL})) AS BIGINT) AS score_q
+             {teacher_score_sql()} AS score_q
       FROM documents
     )
     SELECT doc_id, n_tokens, score_q, score_q >= 0 AS is_quality
@@ -679,10 +579,10 @@ def select_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = sum of token weights -> keep if score >= 0.
 
     The weights here are a deterministic md5-derived stand-in for the
-    trained model (documented frozen-artifact policy, see _QC_W_SPARK);
-    correctness of the PIPELINE (hashing, folding, gating) is what the
-    oracle checks, bit-exactly, because everything stays on the integer
-    grid.
+    trained model (documented frozen-artifact policy, see
+    functions/text.py teacher_score_spark); correctness of the PIPELINE
+    (hashing, folding, gating) is what the oracle checks, bit-exactly,
+    because everything stays on the integer grid.
 
     Scale shape: the ideal one — pure map, no explode, no shuffle, no
     join. Each document folds its own token list with aggregate(); a
@@ -694,9 +594,7 @@ def select_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.expr("cast(size(split(text, ' ')) as bigint)").alias("n_tokens"),
-        F.expr(
-            f"aggregate(split(text, ' '), 0L, (acc, w) -> acc + ({_QC_W_SPARK}))"
-        ).alias("score_q"),
+        F.expr(teacher_score_spark()).alias("score_q"),
     ).withColumn("is_quality", F.col("score_q") >= 0)
 
 
@@ -713,8 +611,7 @@ _DOM_BUDGET = 150  # global corpus budget after capping
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, source,
-             CAST(list_sum(list_transform(string_split(text, ' '),
-                                          w -> {_QC_W_SQL})) AS BIGINT) AS score_q
+             {teacher_score_sql()} AS score_q
       FROM documents
     ),
     ranked AS (
@@ -738,8 +635,8 @@ def select_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain cap + global budget — the web-curation step that stops
     any single domain from dominating the corpus (RefinedWeb / Gopher
     keep per-domain limits for exactly this): rank documents within each
-    source by the frozen quality-classifier score (_QC_W_SPARK, the same
-    artifact select_quality_classifier gates on), keep the top
+    source by the frozen quality-classifier score (teacher_score_spark,
+    the same artifact select_quality_classifier gates on), keep the top
     {_DOM_CAP} per source, then fill the global {_DOM_BUDGET}-document
     budget by score across the capped pool.
 
@@ -754,9 +651,7 @@ def select_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.expr(
-            f"aggregate(split(text, ' '), 0L, (acc, w) -> acc + ({_QC_W_SPARK}))"
-        ).alias("score_q"),
+        F.expr(teacher_score_spark()).alias("score_q"),
     )
     w_dom = Window.partitionBy("source").orderBy(F.desc("score_q"), "doc_id")
     capped = d.withColumn(
@@ -938,9 +833,6 @@ _GOPHER_MIN_MWL, _GOPHER_MAX_MWL = 4, 5         # paper: 3 .. 10 chars
 _GOPHER_MIN_STOPWORDS = 2                       # paper: >= 2 of 8 function words
 _GOPHER_TOP_WORD_DEN = 5                        # top word <= 1/5 of tokens
 
-_GOPHER_STOP_SQL = "['the', 'a', 'of', 'to', 'and', 'in', 'is']"
-_GOPHER_STOP_SPARK = "array('the', 'a', 'of', 'to', 'and', 'in', 'is')"
-
 
 @query(
     "select_gopher_rules",
@@ -958,7 +850,7 @@ _GOPHER_STOP_SPARK = "array('the', 'a', 'of', 'to', 'and', 'in', 'is')"
       SELECT doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
              CAST(length(text) AS BIGINT) AS n_chars,
-             CAST(len(list_filter({_GOPHER_STOP_SQL},
+             CAST(len(list_filter({stopwords_sql("en")},
                s -> list_contains(string_split(text, ' '), s))) AS BIGINT)
                AS stop_hits
       FROM documents
@@ -1016,7 +908,7 @@ def select_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split("text", " ")).cast("long").alias("n_words"),
         F.length("text").cast("long").alias("n_chars"),
         F.expr(
-            f"size(filter({_GOPHER_STOP_SPARK},"
+            f"size(filter({stopwords_spark('en')},"
             " s -> array_contains(split(text, ' '), s)))"
         ).cast("long").alias("stop_hits"),
     )

@@ -7,7 +7,7 @@ A5 composed end-to-end, the way matchcode's snippet matcher runs it
   2. query side: documents doc_id % 10 == 0 (their own fingerprints)
   3. J8: inverted-index equi-join on fingerprint
   4. F7: each matched fingerprint at `position` covers
-     [position, position + SNIPPET_WINDOW_LENGTH - 1]
+     [position, position + WINNOW_GRAM - 1]
   5. F6: merge overlapping/near (gap ≤ 16) spans per (query, index) pair
   6. A5/W6 outputs: per pair — matched distinct fingerprints, jaccard
      against the index doc's fingerprint count, merged span count, covered
@@ -23,52 +23,24 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
+from purldb_spark.functions.text import WINNOW_GRAM, WINNOW_SQL, winnow_fingerprints
 from purldb_spark.plans.registry import query
 
-SNIPPET_WINDOW_LENGTH = 5  # tokens covered by one snippet fingerprint
-WINNOW_WINDOW = 4
 MERGE_GAP = 16  # matchcode/match.py:313-317
 
 
 def _index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, pos, fp): winnowed snippet fingerprints with positions."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= SNIPPET_WINDOW_LENGTH)
-    )
-    # r15: position-explode + per-row md5 (codegen) instead of the
-    # interpreted transform(...) array build; pos stays 0-based
-    grams = d.select(
-        "doc_id",
-        F.expr("explode(sequence(1, size(w) - 4))").alias("i"),
-        "w",
-    ).select(
-        "doc_id",
-        F.expr("i - 1").alias("pos"),
-        F.expr("md5(concat_ws(' ', slice(w, i, 5)))").alias("g"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_WINDOW - 1)
+    """(doc_id, pos, fp): winnowed snippet fingerprints, each at the first
+    position it was kept."""
     return (
-        grams.withColumn("fp", F.min("g").over(win))
+        winnow_fingerprints(load(spark, sf_dir, "documents"))
         .groupBy("doc_id", "fp")
-        .agg(F.min("pos").alias("pos"))  # first position per kept fingerprint
+        .agg(F.min("pos").alias("pos"))
     )
 
 
-_INDEX_SQL = """
-  SELECT doc_id, fp, min(pos) AS pos FROM (
-    SELECT doc_id, pos,
-           min(g) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-    FROM (
-      SELECT doc_id, i - 1 AS pos,
-             md5(array_to_string(list_slice(w, i, i + 4), ' ')) AS g
-      FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            WHERE len(string_split(text, ' ')) >= 5),
-           unnest(generate_series(1, len(w) - 4)) AS t(i)
-    )
-  ) GROUP BY doc_id, fp
+_INDEX_SQL = f"""
+  SELECT doc_id, fp, min(pos) AS pos FROM ({WINNOW_SQL}) GROUP BY doc_id, fp
 """
 
 
@@ -80,7 +52,7 @@ _INDEX_SQL = """
     sizes AS (SELECT doc_id, count(*) AS n_fp FROM idx GROUP BY doc_id),
     hits AS (  -- J8 + F7: inverted-index join, spans [pos, pos+4]
       SELECT q.q_doc_id, i.doc_id AS index_doc_id, i.fp,
-             i.pos AS span_start, i.pos + {SNIPPET_WINDOW_LENGTH - 1} AS span_end
+             i.pos AS span_start, i.pos + {WINNOW_GRAM - 1} AS span_end
       FROM q JOIN idx i ON q.fp = i.fp
       WHERE q.q_doc_id <> i.doc_id
     ),
@@ -147,7 +119,7 @@ def snippet_match_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("index_doc_id"),
             "fp",
             F.col("pos").alias("span_start"),
-            (F.col("pos") + SNIPPET_WINDOW_LENGTH - 1).alias("span_end"),
+            (F.col("pos") + WINNOW_GRAM - 1).alias("span_end"),
         )
     )
 

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
-from purldb_spark.plans.q_dedup import _SHINGLES_SQL
+from purldb_spark.functions.text import SHINGLES_SQL
 from purldb_spark.plans.registry import query
 
 # md5-percent bucket of a BIGINT id (shared convention; 8 hex chars = 32
@@ -60,7 +60,7 @@ _SPLIT_CASE = (
 @query(
     "split_leakage_safe",
     oracle=f"""
-    WITH RECURSIVE shingles AS MATERIALIZED ({_SHINGLES_SQL}),
+    WITH RECURSIVE shingles AS MATERIALIZED ({SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
     pairs AS MATERIALIZED (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection

@@ -11,7 +11,7 @@ Coverage:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purldb_spark.catalog.tables import load
@@ -22,7 +22,13 @@ from purldb_spark.functions.text import (
     predicted_lang_sql,
     quality_features,
     quality_sql,
+    span_scrub,
+    span_scrub_sql,
     TOKEN_REGEX,
+    winnow_fingerprints,
+    WINNOW_SQL,
+    word_grams,
+    word_grams_sql,
 )
 from purldb_spark.plans.registry import query
 
@@ -77,28 +83,11 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_W = 4  # winnowing window (fingerprints per ~w tokens)
-
-
 @query(
     "text_winnow_fingerprint",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, i AS pos,
-             md5(array_to_string(list_slice(w, i, i + 4), ' ')) AS g
-      FROM toks, unnest(generate_series(1, len(w) - 4)) AS t(i)
-    ),
-    winnowed AS (
-      SELECT doc_id,
-             min(g) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND {_W - 1} FOLLOWING) AS fp
-      FROM grams
-    )
     SELECT doc_id, count(DISTINCT fp) AS n_fingerprints
-    FROM winnowed GROUP BY doc_id
+    FROM ({WINNOW_SQL}) GROUP BY doc_id
     """,
 )
 def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,26 +97,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     window minimum — the classic winnowing guarantee (one fingerprint per
     window, shared grams -> shared fingerprints). Windowed min per doc, no
     UDF."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= 5)  # sequence() runs backward on n<1 — guard
-    )
-    # r15: position-explode + per-row md5 instead of the interpreted
-    # transform(...) array build (same rows; `i` is 1-based where the old
-    # posexplode pos was 0-based, but pos only ordered the winnow window
-    # and i orders identically)
-    grams = d.select(
-        "doc_id",
-        F.expr("explode(sequence(1, size(w) - 4))").alias("pos"),
-        "w",
-    ).select(
-        "doc_id",
-        "pos",
-        F.expr("md5(concat_ws(' ', slice(w, pos, 5)))").alias("g"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _W - 1)
-    winnowed = grams.withColumn("fp", F.min("g").over(win))
+    winnowed = winnow_fingerprints(load(spark, sf_dir, "documents"))
     return winnowed.groupBy("doc_id").agg(
         F.countDistinct("fp").alias("n_fingerprints")
     )
@@ -139,41 +109,20 @@ _BP = 0.99  # DF-percentile: grams in the top 1% of document frequency
 
 @query(
     "text_boilerplate_scrub",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, t.i AS i, array_to_string(w[i:i + {_BN - 1}], ' ') AS g
-      FROM toks, LATERAL unnest(generate_series(1, len(w) - {_BN - 1})) t(i)
-      WHERE len(w) >= {_BN}
-    ),
+    oracle=span_scrub_sql(
+        f"""
+    WITH grams AS ({word_grams_sql(_BN)}),
     df AS (
       SELECT g, COUNT(DISTINCT doc_id) AS d FROM grams GROUP BY g
     ),
     thr AS (SELECT CEIL(quantile_cont(d, {_BP})) AS t FROM df),
     boiler AS (
       SELECT g FROM df, thr WHERE d >= thr.t
-    ),
-    covered AS (
-      SELECT DISTINCT gr.doc_id, CAST(gr.i - 1 + o.j AS BIGINT) AS pos
-      FROM grams gr JOIN boiler b ON gr.g = b.g,
-           LATERAL unnest(generate_series(0, {_BN - 1})) o(j)
-    ),
-    cov_per_doc AS (
-      SELECT doc_id, list(pos) AS cov FROM covered GROUP BY doc_id
     )
-    SELECT t.doc_id,
-           CAST(len(t.w) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(len(c.cov), 0) AS BIGINT) AS n_removed,
-           COALESCE(array_to_string(
-             list_transform(
-               list_filter(generate_series(0, len(t.w) - 1),
-                           p -> NOT list_contains(COALESCE(c.cov, []), p)),
-               p -> t.w[CAST(p AS INT) + 1]),
-             ' '), '') AS scrubbed
-    FROM toks t LEFT JOIN cov_per_doc c ON c.doc_id = t.doc_id
+    SELECT gr.doc_id, gr.i0 FROM grams gr JOIN boiler b ON gr.g = b.g
     """,
+        _BN,
+    ),
 )
 def text_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document boilerplate removal, the C4/CCNet cleanup step: token
@@ -186,26 +135,11 @@ def text_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: gram DF is one groupBy (map-side combined); the
     boilerplate set is the top percentile and SMALL by construction, so it
-    broadcasts; cover-marking and re-assembly shuffle by doc_id only — all
-    equi-joins, linear in corpus size at 100 TB. Reassembly filters
-    positions inside a single array expression per doc (no giant
-    collect_list of exploded tokens)."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("w"))
-    )
-    # r15: position-explode + per-row slice instead of the interpreted
-    # transform(...) array build; i0 stays the 0-based gram position the
-    # cover-marking below expects (the explode emits 1-based i)
-    grams = d.filter(F.size("w") >= _BN).select(
-        "doc_id",
-        F.expr(f"explode(sequence(1, size(w) - {_BN - 1}))").alias("i"),
-        "w",
-    ).select(
-        "doc_id",
-        F.expr("i - 1").alias("i0"),
-        F.expr(f"concat_ws(' ', slice(w, i, {_BN}))").alias("g"),
-    )
+    broadcasts; cover-marking and re-assembly are the shared
+    functions/text.py span_scrub — all equi-joins, linear in corpus size
+    at 100 TB."""
+    docs = load(spark, sf_dir, "documents")
+    grams = word_grams(docs, _BN)
     df_t = grams.groupBy("g").agg(F.countDistinct("doc_id").alias("d"))
     # the percentile is ONE scalar: materialize it driver-side (same
     # precedent as the k-means centroids) — joining a 1-row aggregate
@@ -223,40 +157,7 @@ def text_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     boiler = df_t.filter(F.col("d") >= F.lit(thr_val)).select("g")
-    covered = (
-        grams.join(F.broadcast(boiler), "g")
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"sequence(cast(i0 as bigint), cast(i0 as bigint) + {_BN - 1})"
-                )
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-    cov_per_doc = covered.groupBy("doc_id").agg(
-        F.collect_list("pos").alias("cov")
-    )
-    return (
-        d.join(cov_per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("w").cast("long").alias("n_tokens"),
-            F.coalesce(F.size("cov"), F.lit(0)).cast("long").alias("n_removed"),
-            # array_except builds a hash set of `cov` once per doc and
-            # streams positions through it (O(tokens + covered), order of
-            # the first array preserved, positions are DISTINCT upstream) —
-            # the former per-position array_contains was O(tokens x covered)
-            # per doc, a latent quadratic on boilerplate-heavy docs
-            F.expr(
-                "array_join(transform(array_except("
-                "sequence(0L, cast(size(w) as bigint) - 1),"
-                " coalesce(cov, cast(array() as array<bigint>))),"
-                " p -> element_at(w, cast(p as int) + 1)), ' ')"
-            ).alias("scrubbed"),
-        )
-    )
+    return span_scrub(docs, grams.join(F.broadcast(boiler), "g"), _BN)
 
 
 # ---------------------------------------------------------------------------

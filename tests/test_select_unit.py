@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from purldb_spark.functions.text import bucket_expr_spark
 from purldb_spark.plans.registry import QUERIES, load_inventory
 
 load_inventory()
@@ -69,7 +70,7 @@ def test_dsir_scores_rank_target_language_first(spark):
             FF.expr(f"({qs._TARGET_PRED_SPARK})").alias("is_t"),
             FF.explode(FF.split("text", " ")).alias("wd"),
         )
-        .select("is_t", FF.expr(qs._BUCKET_SPARK.format(w="wd")).alias("b"))
+        .select("is_t", FF.expr(bucket_expr_spark("wd", 1024)).alias("b"))
         .groupBy("b")
         .agg(
             FF.sum(FF.when(FF.col("is_t"), 1).otherwise(0)).alias("ct"),
@@ -95,7 +96,7 @@ def test_dsir_scores_rank_target_language_first(spark):
         for b in range(qs._B)
     ]
     lr_lit = "array(" + ", ".join(f"{v}L" for v in lr) + ")"
-    bw = qs._BUCKET_SPARK.format(w="wd")
+    bw = bucket_expr_spark("wd", 1024)
     by_lang = {
         r["lang"]: r["s"]
         for r in docs.select(
